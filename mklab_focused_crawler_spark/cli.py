@@ -142,8 +142,9 @@ def _build_parser() -> argparse.ArgumentParser:
     pl.add_argument(
         "--workdir",
         default=None,
-        help="intermediate-table dir (default: <out>/_stages) — the text "
-        "chain commits clean/prov tables here (the lineage cut)",
+        help="intermediate-table dir (default: <out>_stages, beside --out) "
+        "— the text chain commits clean/prov tables here (the lineage "
+        "cut); it must not lie inside --out, which is overwritten",
     )
     pl.add_argument("--master", default=None)
     return p
@@ -323,11 +324,19 @@ def _run_pipeline(args) -> dict:
     """The composed pipeline as a batch job: read documents, run every
     hygiene stage, write the (shard, chunk, piece → provenance) map.
     The intermediate clean/prov tables land under --workdir and are the
-    job's restart points (re-running overwrites them)."""
+    job's restart points (re-running overwrites them). They live beside
+    --out, never inside it: the final overwrite of --out would delete
+    them while the plan still reads them."""
     from .operators.pipeline import pipeline_e2e
 
+    workdir = args.workdir or os.path.normpath(args.out) + "_stages"
+    out_abs = os.path.realpath(args.out)
+    if os.path.commonpath([out_abs, os.path.realpath(workdir)]) == out_abs:
+        raise SystemExit(
+            f"--workdir {workdir} lies inside --out {args.out}, which the "
+            "job overwrites"
+        )
     spark = _session(args.master)
-    workdir = args.workdir or os.path.join(args.out, "_stages")
     docs = spark.read.parquet(args.in_path)
     out = pipeline_e2e(spark, docs, workdir=workdir)
     out.write.mode("overwrite").parquet(args.out)

@@ -25,9 +25,12 @@ stays inside whole-stage codegen.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .exprcache import session_expr
 from .text import ascii_lower, ascii_lower_sql
 
 # URLExpansionBolt.java:42-47
@@ -59,6 +62,21 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _by_name(fn):
+    """Build ``fn`` over a column *name* once per session (the trees are
+    name-keyed and iteration-invariant — functions/exprcache.py); a
+    Column argument builds a fresh tree."""
+
+    @functools.wraps(fn)
+    def wrapper(col: Column | str) -> Column:
+        if isinstance(col, str):
+            return session_expr((fn.__name__, col), lambda: fn(F.col(col)))
+        return fn(col)
+
+    return wrapper
+
+
+@_by_name
 def canonicalize_url(col: Column | str) -> Column:
     u = F.trim(_c(col))
     # percent-encode space and pipe (ArticleExtractionBolt.java:238-241)
@@ -126,6 +144,7 @@ def canonicalize_url_sql(expr: str) -> str:
     )
 
 
+@_by_name
 def url_host(col: Column | str) -> Column:
     """Host of an absolute URL, lowercased, port stripped.
 
@@ -142,6 +161,7 @@ def url_host_sql(expr: str) -> str:
     return ascii_lower_sql(host)
 
 
+@_by_name
 def url_path(col: Column | str) -> Column:
     """Path component of an absolute URL ('/' when empty) — robots
     prefix matching operates on this."""

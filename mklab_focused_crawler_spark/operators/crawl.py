@@ -97,6 +97,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import scoring
+from ..functions.exprcache import session_expr
 from ..functions.urls import MAX_URL_LENGTH, canonicalize_url, url_host, url_path
 from ..sources.synthetic_web import (
     BASE_MS,
@@ -141,8 +142,9 @@ FILTER_INCREMENTAL_MIN_KEYS = 500_000
 # Fold claim tombstones into the frontier when they exceed this fraction
 # of total frontier rows (amortized O(1)/row; Iceberg MERGE + compaction
 # on a real cluster). 1.0 balances the costs: carrying tombstones adds
-# only a narrow 8-byte-key shuffle-hash anti-join to each claim, while a
-# fold rewrites the whole frontier — folding below tombs ≈ frontier pays
+# only a narrow 8-byte-key anti-join to each claim (broadcast up to
+# BROADCAST_ANTI_MAX_KEYS tombstones, shuffle-hash above), while a fold
+# rewrites the whole frontier — folding below tombs ≈ frontier pays
 # O(frontier) to avoid less-than-O(frontier) of anti-join build.
 COMPACT_TOMBSTONE_FRAC = 1.0
 
@@ -189,6 +191,14 @@ def score_candidates(
     shuffle_hash hint: the metadata side is large and (in the loop)
     pre-partitioned by url — never sort it per iteration."""
     joined = uniq.hint("shuffle_hash").join(pages_meta, "url", "left")
+    # the score tree (two det_exp polynomials) is session-invariant for
+    # a fixed now_ms: built once, aliased per call
+    score = session_expr(
+        ("page_score", now_ms),
+        lambda: scoring.page_score(
+            F.coalesce(F.col("shares"), F.lit(0)), F.col("pub_ms"), now_ms
+        ),
+    )
     return joined.select(
         "url",
         "canonical_url",
@@ -196,9 +206,7 @@ def score_candidates(
         "bucket",
         url_host("url").alias("host"),
         url_path("url").alias("path"),
-        scoring.page_score(
-            F.coalesce(F.col("shares"), F.lit(0)), F.col("pub_ms"), now_ms
-        ).alias("score"),
+        score.alias("score"),
     )
 
 
@@ -351,7 +359,8 @@ class CrawlLoop:
     ) -> DataFrame:
         """Claimable rows: not claim-folded, not tombstoned (TTL: both
         age out). The tombstone anti-join is broadcast while the
-        un-compacted batch is small; compaction keeps it small."""
+        un-compacted batch is small (≤ BROADCAST_ANTI_MAX_KEYS, the seen
+        gate's threshold); compaction keeps it small."""
         fr = frontier_df if frontier_df is not None else self.frontier.read(self.spark)
         if self.ttl is None:
             active = fr.filter(F.col("claimed_iter").isNull())
@@ -366,11 +375,17 @@ class CrawlLoop:
                 tomb = tomb.filter(
                     F.col("claimed_iter") > F.lit(iteration - self.ttl)
                 )
-            # shuffle_hash: AQE is off in the loop; an unhinted
+            # AQE is off in the loop, so the strategy is an explicit
+            # hint. broadcast: no frontier shuffle, the tombstone keys
+            # ship once. Above the threshold, shuffle_hash — an unhinted
             # anti-join would statically plan sort-merge and re-sort
             # the frontier
+            small = (
+                self._n_tombs is not None
+                and self._n_tombs <= BROADCAST_ANTI_MAX_KEYS
+            )
             active = active.join(
-                tomb.select("url_hash").hint("shuffle_hash"),
+                tomb.select("url_hash").hint("broadcast" if small else "shuffle_hash"),
                 "url_hash",
                 "left_anti",
             )
@@ -504,7 +519,7 @@ class CrawlLoop:
             expanded = claimed.withColumn("expanded_url", F.col("url"))
         else:
             expanded = expand_redirects(claimed, redirects).withColumn(
-                "final_url", canonicalize_url(F.col("expanded_url"))
+                "final_url", canonicalize_url("expanded_url")
             )
 
         # 3. fetch. Default: INNER join of the claimed batch against
@@ -583,7 +598,7 @@ class CrawlLoop:
                 # canonicalize — the same (gate → canonicalize) order
                 fetched = (
                     fetched.filter(F.length("final_url") <= MAX_URL_LENGTH)
-                    .withColumn("final_url", canonicalize_url(F.col("final_url")))
+                    .withColumn("final_url", canonicalize_url("final_url"))
                     .drop("n_redirects")
                 )
         # fetch counters ride the extraction job (CollectMetrics is a
@@ -675,14 +690,16 @@ class CrawlLoop:
         # claim-tombstone commit overlaps the discover job: it reads
         # only the already-materialized `claimed` cache and writes a
         # different table, so a driver thread hides its job-submission
-        # + commit latency behind the iteration's widest stage
-        import threading
+        # + commit latency behind the iteration's widest stage.
+        # InheritableThread: under pinned-thread mode a plain thread
+        # gets a fresh JVM thread without the job description
+        from pyspark import InheritableThread
 
         jd("claims")
         claims_batch = claimed.select(
             "url_hash", "bucket", F.lit(iteration).alias("claimed_iter")
         ).coalesce(4)
-        claims_thread = threading.Thread(
+        claims_thread = InheritableThread(
             target=self.claims.append, args=(claims_batch,), name="claims-append"
         )
         claims_thread.start()
@@ -699,9 +716,12 @@ class CrawlLoop:
         # multi-GB html on the JVM heap, and the GC pauses erased the
         # 8→32-core scaling.
         jd("discover")
-        committed = self.documents.read_appended(self.spark, doc_snap).filter(
-            F.col("iteration") == F.lit(iteration)
-        )
+        committed = self.documents.read_appended(self.spark, doc_snap)
+        if self.ttl is not None:
+            # a merge snapshot's new file holds whole touched partitions
+            # (older rows included); an append snapshot's new files are
+            # exactly this batch — no per-iteration literal filter there
+            committed = committed.filter(F.col("iteration") == F.lit(iteration))
         links = committed.select(
             F.explode("out_links").alias("url"),
             (-F.col("score")).alias("ns"),
@@ -754,13 +774,14 @@ class CrawlLoop:
         else:
             pruned = filter_unseen(cand, seen, None)
         obs_sched = Observation()
+        # the per-iteration literals (first_seen_iter/claimed_iter) are
+        # stamped AFTER the persist boundary, in the small frontier-append
+        # projection: inlined into the score stage they made its large
+        # generated class differ (and recompile) every iteration
         new_urls = (
             score_candidates(
                 dedup_first_seen(pruned).drop("ns", "ph"), meta, self.now_ms
             )
-            .withColumn("first_seen_iter", F.lit(iteration + 1))
-            .withColumn("claimed_iter", F.lit(None).cast("int"))
-            .select(*_FRONTIER_COLS)
             .observe(obs_sched, F.count(F.lit(1)).alias("n_new"))
             .persist()
         )
@@ -790,7 +811,13 @@ class CrawlLoop:
         # per-task files just add scheduler + committer overhead
         lap("filter")
         jd("frontier")
-        self.frontier.append(new_urls.coalesce(8))
+        self.frontier.append(
+            new_urls.select(
+                *_FRONTIER_COLS[:-2],
+                F.lit(iteration + 1).alias("first_seen_iter"),
+                F.lit(None).cast("int").alias("claimed_iter"),
+            ).coalesce(8)
+        )
         cand.unpersist()  # new_urls is materialized; cand no longer needed
         n_new = int(obs_sched.get["n_new"])
         if bloom_broadcast:

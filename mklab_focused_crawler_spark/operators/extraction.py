@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprcache import session_expr
 from ..functions.hashing import hash64
 from ..functions.text import ascii_lower
 
@@ -226,7 +227,50 @@ def extract_articles_native(
     Documented divergences from the Python-re reference (ASCII inputs
     identical): Java ``\\s``/``\\b``/``\\w`` are ASCII-only while
     Python's are Unicode-aware; huge (>19-digit) width/height attrs
-    overflow try_cast to NULL and drop the image."""
+    overflow try_cast to NULL and drop the image.
+
+    The kernel's expression trees are built once per session
+    (``_native_kernel``); each call only aliases them onto ``df``."""
+    k = _native_kernel(html_col)
+    out = df.select(
+        F.col(id_col).alias("doc_id"),
+        k["title"].alias("title"),
+        k["spans"].alias("spans"),
+        *passthrough,
+    )
+    # spans is the single expensive producer; every output below derives
+    # from its attribute (CollapseProject keeps a non-cheap expr used
+    # more than once in its own projection — evaluated exactly once)
+    out = out.select(
+        "doc_id",
+        "title",
+        k["is_article"].alias("is_article"),
+        "spans",
+        k["media_ids"].alias("media_ids"),
+        *passthrough,
+    )
+    return out.select(
+        "doc_id",
+        "title",
+        "is_article",
+        "spans",
+        k["media"].alias("media"),
+        "media_ids",
+        k["media_thumbnail"].alias("media_thumbnail"),
+        *passthrough,
+    )
+
+
+def _native_kernel(html_col: str) -> dict[str, F.Column]:
+    """The native kernel's un-aliased output expressions over
+    ``html_col`` — title and spans over the html, the rest over the
+    ``spans``/``media_ids`` output attributes — built once per session."""
+    return session_expr(
+        ("extract_articles_native", html_col), lambda: _build_kernel(html_col)
+    )
+
+
+def _build_kernel(html_col: str) -> dict[str, F.Column]:
     h = F.coalesce(F.col(html_col), F.lit(""))
     title = F.trim(
         F.regexp_replace(
@@ -351,15 +395,6 @@ def extract_articles_native(
         ),
     )
 
-    out = df.select(
-        F.col(id_col).alias("doc_id"),
-        title.alias("title"),
-        spans.alias("spans"),
-        *[F.col(c) for c in passthrough],
-    )
-    # spans is the single expensive producer; every output below derives
-    # from its attribute (CollapseProject keeps a non-cheap expr used
-    # more than once in its own projection — evaluated exactly once)
     media_ids = F.transform(
         F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("media")),
         lambda s: s["media_ref"],
@@ -373,24 +408,14 @@ def extract_articles_native(
             F.size(F.regexp_extract_all(s["text"], F.lit(_WORD), F.lit(0))),
         ).otherwise(F.lit(0)),
     )
-    out = (
-        out.withColumn("is_article", total_words >= MIN_ARTICLE_WORDS)
-        .withColumn("media_ids", media_ids)
-        .withColumn("media", F.size(F.col("media_ids")))
-        .withColumn(
-            "media_thumbnail", F.coalesce(F.get(F.col("media_ids"), 0), F.lit(""))
-        )
-    )
-    return out.select(
-        "doc_id",
-        "title",
-        "is_article",
-        "spans",
-        "media",
-        "media_ids",
-        "media_thumbnail",
-        *passthrough,
-    )
+    return {
+        "title": title,
+        "spans": spans,
+        "is_article": total_words >= MIN_ARTICLE_WORDS,
+        "media_ids": media_ids,
+        "media": F.size(F.col("media_ids")),
+        "media_thumbnail": F.coalesce(F.get(F.col("media_ids"), 0), F.lit("")),
+    }
 
 
 def extract_articles(

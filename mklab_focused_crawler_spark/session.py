@@ -4,7 +4,7 @@ Defaults tuned for the sandbox (local[N], single JVM) but every knob is
 what we would set on a real multi-executor cluster: AQE on (runtime
 coalesce + skew-join splitting complements our explicit salting),
 shuffle partitions sized to cores (not the 200 default), Arrow enabled
-for the pandas-UDF kernels.
+for the pandas-UDF kernels, PySpark's per-call call-site capture off.
 """
 
 from __future__ import annotations
@@ -39,6 +39,17 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no per-call Python call-site capture: with it on, every Column
+        # or DataFrame call walks the Python stack and adds gateway
+        # round-trips (a fixed driver cost per expression node). Errors
+        # still carry the JVM message, without the Python file:line
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # generated-class cache: the default 100 entries (LRU per hash
+        # segment) is smaller than one crawl super-step's working set of
+        # ~30 classes compiled once by the driver and once under the
+        # executor classloader, so identical classes recompiled every
+        # iteration (a ~120 KB projection among them)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

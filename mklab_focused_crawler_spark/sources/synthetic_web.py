@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exprcache import session_expr
+
 VOCAB = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima "
     "mike november oscar papa quebec romeo sierra tango uniform victor whiskey "
@@ -205,20 +207,33 @@ def synthetic_fetch(
     missing rows. Exact join-path parity is pinned by
     tests/test_crawl_parts.py::test_synthetic_fetch_parity."""
 
-    def fetch(df: DataFrame) -> DataFrame:
+    def build() -> dict[str, F.Column]:
         i = F.regexp_extract(F.col(url_col), _PAGE_IDX_RE, 1).try_cast("long")
         cols = _page_columns(i, n_pages, n_hosts, min_blocks, mod_blocks)
-        return (
-            df.withColumn("_i", i)
-            .filter(F.col("_i").isNotNull() & (F.col("_i") < n_pages))
+        return {
+            "i": i,
+            "in_range": F.col("_i").isNotNull() & (F.col("_i") < n_pages),
             # the regenerated URL must round-trip (guards against a
             # foreign URL that happens to end in page/<n>)
-            .filter(F.col(url_col) == cols["url"])
+            "round_trip": F.col(url_col) == cols["url"],
+            **{c: cols[c] for c in ("mime", "html", "out_links")},
+        }
+
+    key = ("synthetic_fetch", n_pages, n_hosts, min_blocks, mod_blocks, url_col)
+
+    def fetch(df: DataFrame) -> DataFrame:
+        # the page generator's trees are iteration-invariant: built
+        # once per session, aliased per call
+        c = session_expr(key, build)
+        return (
+            df.withColumn("_i", c["i"])
+            .filter(c["in_range"])
+            .filter(c["round_trip"])
             .select(
                 *df.columns,
-                cols["mime"].alias("mime"),
-                cols["html"].alias("html"),
-                cols["out_links"].alias("out_links"),
+                c["mime"].alias("mime"),
+                c["html"].alias("html"),
+                c["out_links"].alias("out_links"),
             )
         )
 

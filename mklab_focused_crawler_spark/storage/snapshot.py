@@ -18,6 +18,15 @@ A snapshot is visible only after its manifest is atomically renamed into
 place — readers never see partial writes; a killed writer leaves only
 orphan data dirs (cleaned opportunistically). Single-writer, like an
 Iceberg table with optimistic locking and one committer.
+
+Schema: a parquet read without a schema runs one footer-reading Spark
+job to infer it. A handle remembers the schema it last inferred, keyed
+by the exact data-file list it was inferred over (Iceberg keeps the
+schema in table metadata the same way), and passes it to later reads
+of that list. Its own same-schema appends carry it forward; every
+other commit (overwrite, merge, replace_partitions, compact), a
+rollback or another writer's commit changes the file list, so the next
+read infers afresh.
 """
 
 from __future__ import annotations
@@ -29,6 +38,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .interface import VersionedTable
 
@@ -43,6 +53,8 @@ class SnapshotTable(VersionedTable):
         self.data_dir = os.path.join(self.dir, "data")
         self.snap_dir = os.path.join(self.dir, "_snapshots")
         self.partition_by = tuple(partition_by)
+        # (data-file list, schema inferred over exactly those files)
+        self._schema: tuple[tuple[str, ...], StructType] | None = None
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.snap_dir, exist_ok=True)
 
@@ -108,6 +120,34 @@ class SnapshotTable(VersionedTable):
         w.parquet(d)
         return d
 
+    # -- schema memo -------------------------------------------------------
+    def _files_key(self, files: list) -> tuple[str, ...]:
+        return tuple(self._entry_path(e) for e in files)
+
+    def _known_schema(self, files: list) -> StructType | None:
+        if self._schema is not None and self._schema[0] == self._files_key(files):
+            return self._schema[1]
+        return None
+
+    @staticmethod
+    def _scan(spark: SparkSession, schema: StructType | None, *paths: str) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
+
+    def _carry_schema(self, parent: list, files: list, df: DataFrame) -> None:
+        """After this handle appended ``df`` to the ``parent`` file list:
+        keep the memo valid for the new list when ``df`` has the same
+        columns and types. Not on partitioned tables — their partition
+        column types are inferred from directory names, per segment."""
+        known = self._known_schema(parent)
+        self._schema = None
+        if known is None or self.partition_by:
+            return
+        if [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+            (f.name, f.dataType.simpleString()) for f in known
+        ]:
+            self._schema = (self._files_key(files), known)
+
     # -- public ops ------------------------------------------------------
     def exists(self) -> bool:
         return self.current_snapshot() is not None
@@ -133,7 +173,9 @@ class SnapshotTable(VersionedTable):
         files = self._manifest(cur)["files"] if cur else []
         nxt = (cur or 0) + 1
         d = self._write_data(df, nxt)
-        return self._commit(files + [d], "append", (tag,) if tag else ())
+        snap = self._commit(files + [d], "append", (tag,) if tag else ())
+        self._carry_schema(files, files + [d], df)
+        return snap
 
     def has_tag(self, tag: str) -> bool:
         """Whether an append carrying ``tag`` already committed. Tag and
@@ -178,15 +220,24 @@ class SnapshotTable(VersionedTable):
         if snap is None:
             raise FileNotFoundError(f"table {self.dir} has no committed snapshot")
         files = self._manifest(snap)["files"]
+        schema = self._known_schema(files)
+        out = self._read_files(spark, files, schema)
+        if schema is None:
+            self._schema = (self._files_key(files), out.schema)
+        return out
+
+    def _read_files(
+        self, spark: SparkSession, files: list, schema: StructType | None
+    ) -> DataFrame:
         has_excludes = any(not isinstance(e, str) and e.get("exclude") for e in files)
         if not has_excludes and not (self.partition_by and len(files) > 1):
-            return spark.read.parquet(*[self._entry_path(e) for e in files])
+            return self._scan(spark, schema, *[self._entry_path(e) for e in files])
         # each data dir has its own hive partition tree; a multi-path
         # read would reject the "conflicting" structures — union the
         # per-dir reads (partition pruning still applies per scan)
         out = None
         for e in files:
-            df = spark.read.parquet(self._entry_path(e))
+            df = self._scan(spark, schema, self._entry_path(e))
             if not isinstance(e, str):
                 for col, values in (e.get("exclude") or {}).items():
                     # exclusions are stored as hive dir-name strings;
@@ -262,8 +313,12 @@ class SnapshotTable(VersionedTable):
         without listing or filtering the whole table. For a
         ``replace_partitions``/``merge`` snapshot the new file holds the
         merged *partitions* (old rows of touched partitions included) —
-        filter by a batch predicate if exact batch rows are needed."""
-        files = {self._entry_path(e) for e in self._manifest(snapshot)["files"]}
+        filter by a batch predicate if exact batch rows are needed.
+
+        Reads with the table schema: remembered, or (unpartitioned) read
+        once for the snapshot and remembered from then on."""
+        entries = self._manifest(snapshot)["files"]
+        files = set(self._files_key(entries))
         prev: set[str] = set()
         if snapshot > 1 and os.path.exists(
             os.path.join(self.snap_dir, f"{snapshot - 1:07d}.json")
@@ -271,7 +326,10 @@ class SnapshotTable(VersionedTable):
             prev = {
                 self._entry_path(e) for e in self._manifest(snapshot - 1)["files"]
             }
-        return spark.read.parquet(*sorted(files - prev))
+        schema = self._known_schema(entries)
+        if schema is None and not self.partition_by:
+            schema = self.read(spark, snapshot).schema
+        return self._scan(spark, schema, *sorted(files - prev))
 
     def replace_partitions(
         self, spark: SparkSession, df: DataFrame, partition_values: dict
@@ -519,6 +577,7 @@ class SnapshotTable(VersionedTable):
         """Point CURRENT back to an older snapshot (resume-after-kill)."""
         if not os.path.exists(os.path.join(self.snap_dir, f"{snapshot:07d}.json")):
             raise FileNotFoundError(f"no snapshot {snapshot}")
+        self._schema = None
         ctmp = self._current_path() + ".tmp"
         with open(ctmp, "w") as f:
             f.write(str(snapshot))

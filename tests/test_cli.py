@@ -12,6 +12,7 @@ import sys
 import pytest
 
 from mklab_focused_crawler_spark.cli import main
+from tests.conftest import SF_DIR
 
 
 def test_cli_synthetic_crawl_and_resume(spark, tmp_path, capsys):
@@ -368,3 +369,31 @@ def test_cli_pipeline_runs_end_to_end(spark, tmp_path, capsys):
         "piece_len",
     } == set(got.columns)
     assert got.count() == res["rows"]
+
+
+def test_cli_pipeline_rerun_keeps_restart_tables(spark, tmp_path, capsys):
+    """Running `pipeline` twice into the same --out succeeds both times:
+    the default workdir lies beside --out (never inside the overwrite
+    target), so the clean/prov restart tables survive each run. A
+    workdir inside --out is refused before the session starts."""
+    out_dir = str(tmp_path / "pipe_out")
+    argv = [
+        "pipeline",
+        "--in",
+        f"{SF_DIR}/documents.parquet",
+        "--out",
+        out_dir,
+        "--master",
+        "local[4]",
+    ]
+    rows = []
+    for _ in range(2):
+        main(argv)
+        res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert res["done"] and res["workdir"] == out_dir + "_stages"
+        rows.append(res["rows"])
+    assert rows[0] == rows[1] > 0
+    for table in ("clean", "prov"):
+        assert spark.read.parquet(os.path.join(out_dir + "_stages", table)).count() > 0
+    with pytest.raises(SystemExit):
+        main(argv + ["--workdir", os.path.join(out_dir, "_stages")])
