@@ -44,6 +44,9 @@ chunks, joined back to real doc ids at the end).
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -124,7 +127,7 @@ def pipeline_e2e(
     spark: SparkSession,
     documents: DataFrame,
     caches: list | None = None,
-    workdir: str = "spark-warehouse/pipeline_scratch",
+    workdir: str | None = None,
 ) -> DataFrame:
     """(shard_id, chunk_id, pos, doc_id, source, piece_start, piece_len)
     — the full pipeline's packed-training-chunk map with provenance.
@@ -135,8 +138,16 @@ def pipeline_e2e(
     otherwise embed the whole multi-stage chain once per consumer
     (measured: the cache-name stringification alone OOMed the driver),
     and at 100 TB the intermediate IS a table (the crawl loop's
-    docs-commit convention). ``caches`` (if given) receives the
-    persisted downstream id-frames whose release the caller owns."""
+    docs-commit convention). ``workdir`` defaults to a fresh directory
+    per call under ``spark-warehouse/pipeline_scratch``: two runs in one
+    process must not overwrite each other's tables, and the returned
+    plan reads them, so they outlive the call. ``caches`` (if given)
+    receives the persisted downstream id-frames whose release the
+    caller owns."""
+    if workdir is None:
+        base = os.path.join("spark-warehouse", "pipeline_scratch")
+        os.makedirs(base, exist_ok=True)
+        workdir = tempfile.mkdtemp(prefix="run-", dir=base)
     aug = pipeline_augment(documents)
     prov = aug.select("doc_id", "source")
 

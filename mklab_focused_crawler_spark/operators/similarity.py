@@ -18,8 +18,10 @@ display value derived from the same integers.
 
 Scale: at 10^8+ vectors the probe side broadcasts (probes are few) so
 the brute-force scan is shuffle-free; the LSH path shuffles once on
-``bucket``. All kernels are built-in column expressions (zip_with /
-aggregate); no Python in the hot path.
+``bucket``. Pairwise scoring is built-in column expressions (zip_with /
+aggregate); the two matrix-shaped kernels — GEMM brute force and IVF
+nearest-centroid assignment — are int64 Arrow batches (one Python
+crossing per batch, exact on both engines).
 """
 
 from __future__ import annotations
@@ -565,9 +567,9 @@ def ann_topk_multi_sql(k: int = TOP_K) -> str:
 # centroid assignment a pure integer argmax of the dot product: exact
 # and identical across engines, no norm-ratio comparisons needed.
 #
-# Plan shape: the codebook is a plan literal (broadcast-equivalent);
-# assignment is a narrow map (array_sort over K structs per row — no
-# n×K shuffle); candidate generation is ONE equi-join probe-lists ⋈
+# Plan shape: the codebook is a broadcast variable; assignment is a
+# narrow map (ivf_assign: one int64 GEMM per Arrow batch — no n×K
+# shuffle); candidate generation is ONE equi-join probe-lists ⋈
 # assignments on list_id. Unlike multi-table LSH no distinct is needed:
 # each vector lives in exactly one list and a probe visits each list
 # once, so candidate pairs are already unique.
@@ -738,85 +740,83 @@ def train_ivf_codebook_parquet(path: str) -> list[list[int]]:
     )
 
 
-def _codebook_lits(cents: list[list[int]]) -> tuple[F.Column, F.Column]:
-    """(codebook, norms) as TWO literal columns — one nested-array
-    Literal node and one array Literal node — instead of per-centroid
-    expression branches. With k separate qdot subtrees the expression
-    tree grows ∝ k·dim and Catalyst/codegen pay seconds of compile per
-    plan (measured: the 128-branch PQ code stage alone cost ~5 s per
-    fresh plan at 2000 rows); with literals the tree is a constant size
-    and one transform lambda folds every centroid. Mandatory once the
-    list count derives from the corpus (k up to 4096)."""
-    cbs = F.lit([[int(v) for v in c] for c in cents]).cast(
-        "array<array<bigint>>"
-    )
-    n2s = F.lit([sum(v * v for v in c) for c in cents]).cast("array<bigint>")
-    return cbs, n2s
+def _codebook(cents: list[list[int]]):
+    """(C, |c|²) as int64 numpy arrays — the kernel's broadcast form of
+    one codebook (coarse list centroids or one PQ sub-codebook)."""
+    import numpy as np
+
+    C = np.asarray(cents, dtype=np.int64)
+    return C, (C * C).sum(axis=1)
 
 
-def _l2_score_structs(q_col, cents: list[list[int]]) -> F.Column:
-    """array<struct<nd,j>> of squared-L2 sort keys vs every centroid:
-    nd = |c_j|² − 2⟨x,c_j⟩ (the |x|² term is constant per row), j the
-    deterministic tie-break. One transform over the literal codebook."""
-    cbs, n2s = _codebook_lits(cents)
+def _nearest(X, C, cn2, n_keep: int):
+    """The nearest-centroid rule: per row of the int64 batch ``X``, the
+    ``n_keep`` best centroid ids under nd = |c_j|² − 2⟨x,c_j⟩ ascending
+    (|x−c|² minus the per-row constant |x|²), centroid id ascending on
+    ties — a stable argsort keeps equal keys in column (= id) order.
+    int64 exact, so the order is the DuckDB twin's
+    ``row_number() OVER (… ORDER BY nd ASC, j ASC)`` bit for bit. For
+    the equal-norm ±1 default codebook this is dot-descending order."""
+    import numpy as np
 
-    def score(cvec, j):
-        return F.struct(
-            (F.element_at(n2s, j + F.lit(1)) - 2 * qdot(q_col, cvec)).alias(
-                "nd"
-            ),
-            j.cast("int").alias("j"),
-        )
-
-    return F.transform(cbs, score)
+    nd = cn2[None, :] - 2 * (X @ C.T)
+    return np.argsort(nd, axis=1, kind="stable")[:, :n_keep]
 
 
-def _ivf_ranked_lists(q_col, centroids: list[list[int]] | None = None) -> F.Column:
-    """Array of list ids, best-first under squared L2 distance:
-    |x−c|² = |x|² − 2⟨x,c⟩ + |c|², and |x|² is constant per row, so the
-    sort key is nd = |c_j|² − 2⟨x,c_j⟩ ascending with centroid id as the
-    deterministic tie-break. For the equal-norm ±1 default codebook this
-    is exactly the old dot-descending order (|c|² constant), so the
-    default-path output is unchanged; for a trained codebook (unequal
-    norms) L2 is the correct nearest-centroid rule. Pure int64 either
-    way — exact on both engines."""
-    cents = IVF_CENTROIDS if centroids is None else centroids
-    return F.transform(
-        F.array_sort(_l2_score_structs(q_col, cents)), lambda s: s["j"]
-    )
-
-
-# Regime boundary for nearest-centroid assignment: at or below this list
-# count the pure-expression scorer runs (zero Python in the plan); above
-# it the k·DIM interpreted HOF evaluations per row dominate (measured:
-# 76.7 s for 20k rows at k=156 vs 1.3 s of actual integer work) and the
-# Arrow GEMM kernel takes over — nearest-centroid assignment IS a matrix
-# multiply (FAISS's own assignment path), and the derived list count
-# reaches 4096, where no expression formulation compiles or runs well.
-IVF_EXPR_MAX_K = 64
-
-
-def _ranked_gemm_kernel(bc, n_keep: int, cols: list[str]):
+def _assign_kernel(bc, n_keep: int, cols: list[str]):
     import numpy as np
 
     def kernel(batches):
-        import pandas as pd
-
-        C, cn2 = bc.value
+        (C, cn2), books = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            nd = cn2[None, :] - 2 * (X @ C.T)  # int64 exact
-            # stable argsort on nd == ordering by (nd, j): ties keep the
-            # original column order, i.e. centroid id ascending — the
-            # same total comparator as the expression path's (nd, j)
-            order = np.argsort(nd, axis=1, kind="stable")[:, :n_keep]
             out = pdf[cols].copy()
-            out["ranked"] = [row.astype(np.int32).tolist() for row in order]
+            ranked = _nearest(X, C, cn2, n_keep).astype(np.int32)
+            out["ranked"] = [row.tolist() for row in ranked]
+            if books:
+                # PQ codes ride the same pass: one GEMM per sub-codebook
+                # over the row's DIM/M slice; the code is the first id
+                codes = np.hstack(
+                    [
+                        _nearest(X[:, mi * PQ_SUB : (mi + 1) * PQ_SUB], Cm, n2m, 1)
+                        for mi, (Cm, n2m) in enumerate(books)
+                    ]
+                ).astype(np.int32)
+                out["code"] = [row.tolist() for row in codes]
             yield out
 
     return kernel
+
+
+def _assign(
+    q_frame: DataFrame,
+    centroids: list[list[int]] | None,
+    n_keep: int,
+    books: tuple | list = (),
+) -> DataFrame:
+    """``q_frame`` + ``ranked`` (and ``code`` when PQ ``books`` are
+    given) from ONE Arrow pass: assignment is a matrix multiply
+    (FAISS's own path), so each batch costs one int64 GEMM against the
+    broadcast codebook plus one per PQ sub-codebook — the Python
+    boundary is crossed once per batch, never per centroid or per
+    dimension."""
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+    cents = IVF_CENTROIDS if centroids is None else centroids
+    bc = q_frame.sparkSession.sparkContext.broadcast(
+        (_codebook(cents), [_codebook(b) for b in books])
+    )
+    # a COPY: StructType.add mutates the receiving instance, and the
+    # input frame's cached schema must not grow a phantom column
+    added = ["ranked"] + (["code"] if books else [])
+    schema = StructType(
+        list(q_frame.schema.fields)
+        + [StructField(c, ArrayType(IntegerType())) for c in added]
+    )
+    kernel = _assign_kernel(bc, min(n_keep, len(cents)), list(q_frame.columns))
+    return q_frame.mapInPandas(kernel, schema)
 
 
 def ivf_assign(
@@ -826,33 +826,10 @@ def ivf_assign(
 ) -> DataFrame:
     """``q_frame`` (must carry an int-array column ``q``) + a ``ranked``
     array<int> column of the ``n_keep`` best list ids under the exact
-    (nd, j) rule — the shared nearest-centroid assignment of the IVF
-    family (ivf_topk / semantic_dedup / ivf_pq_topk). Regime-switched
-    on the list count (see IVF_EXPR_MAX_K): the two paths compute the
-    SAME int64 scores with the SAME tie-break, so the output is
-    bit-identical — pinned by the big-k twin-parity test."""
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-    cents = IVF_CENTROIDS if centroids is None else centroids
-    n_keep = min(n_keep, len(cents))
-    if len(cents) <= IVF_EXPR_MAX_K:
-        return q_frame.withColumn(
-            "ranked",
-            F.slice(_ivf_ranked_lists(F.col("q"), cents), 1, n_keep),
-        )
-    import numpy as np
-
-    C = np.asarray(cents, dtype=np.int64)
-    cn2 = (C * C).sum(axis=1)
-    bc = q_frame.sparkSession.sparkContext.broadcast((C, cn2))
-    cols = list(q_frame.columns)
-    # a COPY: StructType.add mutates the receiving instance, and the
-    # input frame's cached schema must not grow a phantom column
-    schema = StructType(
-        list(q_frame.schema.fields)
-        + [StructField("ranked", ArrayType(IntegerType()))]
-    )
-    return q_frame.mapInPandas(_ranked_gemm_kernel(bc, n_keep, cols), schema)
+    (nd, j) rule of :func:`_nearest` — the one Spark nearest-centroid
+    assignment of the IVF family (ivf_topk / semantic_dedup /
+    ivf_pq_topk and the streaming IVF index), at every list count."""
+    return _assign(q_frame, centroids, n_keep)
 
 
 def ivf_topk(
@@ -905,34 +882,49 @@ def ivf_topk(
     )
 
 
-def ivf_topk_sql(
-    k: int = TOP_K,
-    n_probe: int = N_PROBE,
-    centroids: list[list[int]] | None = None,
-) -> str:
+def _nearest_centroid_sql(
+    centroids: list[list[int]] | None, margin: int = 12
+) -> tuple[str, str]:
+    """DuckDB twin of :func:`_nearest`, shared by every IVF-family SQL
+    twin: ``scores`` — the UNION ALL of one (vec_id, j, nd) SELECT per
+    centroid over the ``qt`` CTE, nd = |c_j|² − 2⟨x,c_j⟩ in BIGINT —
+    and ``rank``, the SELECT over a CTE named ``scores`` that numbers
+    each vector's lists ``rn`` = 1, 2, … by (nd ASC, j ASC). ``margin``
+    is the indent of the rank SELECT's continuation lines (each caller
+    nests it at its own depth)."""
     cents = IVF_CENTROIDS if centroids is None else centroids
-    q = quantized_sql("embedding")
-    # nd = |c_j|² − 2⟨x,c_j⟩: the L2 nearest-centroid key (see
-    # _ivf_ranked_lists) — identical ordering to d DESC for the
-    # equal-norm default codebook, correct for trained codebooks
-    per_list = "\n            UNION ALL ".join(
+    scores = "\n            UNION ALL ".join(
         f"SELECT vec_id, {j} AS j, "
         f"CAST({sum(v * v for v in c)} AS BIGINT) - 2 * "
         f"{qdot_sql('q', '[' + ', '.join(str(v) for v in c) + ']')} AS nd FROM qt"
         for j, c in enumerate(cents)
     )
+    pad = " " * margin
+    rank = (
+        "SELECT vec_id, j,\n"
+        f"{pad}       row_number() OVER (PARTITION BY vec_id\n"
+        f"{pad}            ORDER BY nd ASC, j ASC) AS rn\n"
+        f"{pad}FROM scores"
+    )
+    return scores, rank
+
+
+def ivf_topk_sql(
+    k: int = TOP_K,
+    n_probe: int = N_PROBE,
+    centroids: list[list[int]] | None = None,
+) -> str:
+    q = quantized_sql("embedding")
+    scores, rank = _nearest_centroid_sql(centroids)
     return f"""
         WITH qt AS (
             SELECT vec_id, {q} AS q, {qdot_sql(q, q)} AS n2 FROM embeddings
         ),
         scores AS (
-            {per_list}
+            {scores}
         ),
         ranked AS (
-            SELECT vec_id, j,
-                   row_number() OVER (PARTITION BY vec_id
-                        ORDER BY nd ASC, j ASC) AS rn
-            FROM scores
+            {rank}
         ),
         assign AS (SELECT vec_id, j AS list_id FROM ranked WHERE rn = 1),
         probe_lists AS (
@@ -1017,8 +1009,10 @@ def train_pq_codebooks(
 def train_pq_codebooks_df(embeddings: DataFrame) -> list[list[list[int]]]:
     """Train from a Spark embeddings table — same scale-adaptive
     decimation (and therefore the same sample) as the coarse-quantizer
-    job, so one collected sample serves both trainings at deployment."""
-    mod = train_sample_mod(embeddings.count())
+    job (the modulus derives from the SAME corpus-derived list count),
+    so one collected sample serves both trainings at deployment."""
+    n = embeddings.count()
+    mod = train_sample_mod(n, k=derive_k_lists(n))
     rows = (
         embeddings.filter(F.col("vec_id") % mod == 0)
         .select("vec_id", "embedding")
@@ -1033,7 +1027,7 @@ def train_pq_codebooks_parquet(path: str) -> list[list[list[int]]]:
     import pyarrow.parquet as pq
 
     t = pq.read_table(path, columns=["vec_id", "embedding"])
-    mod = train_sample_mod(t.num_rows)
+    mod = train_sample_mod(t.num_rows, k=derive_k_lists(t.num_rows))
     return train_pq_codebooks(
         (v, e)
         for v, e in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
@@ -1041,28 +1035,14 @@ def train_pq_codebooks_parquet(path: str) -> list[list[list[int]]]:
     )
 
 
-def _pq_sub(q_col, mi: int) -> F.Column:
-    return F.slice(q_col, mi * PQ_SUB + 1, PQ_SUB)
-
-
-def _pq_code(q_col, books: list[list[list[int]]]) -> F.Column:
-    """array<int> of per-sub-space nearest-centroid codes (squared-L2
-    ascending, code id ascending as the deterministic tie-break — the
-    same argmin rule as the coarse quantizer, per sub-slice). Literal
-    sub-codebooks + one transform per sub-space (see
-    :func:`_codebook_lits` for why)."""
-    codes = []
-    for mi, book in enumerate(books):
-        scores = _l2_score_structs(_pq_sub(q_col, mi), book)
-        codes.append(F.element_at(F.array_sort(scores), 1)["j"])
-    return F.array(*codes)
-
-
 def _pq_tbl(pq_col, books: list[list[list[int]]]) -> F.Column:
     """array<array<long>>: tbl[m][j] = ⟨probe_sub_m, c_{m,j}⟩ — the
     per-probe asymmetric-distance table (m·ks int64 dot products,
-    evaluated on PROBE rows only; one transform over each literal
-    sub-codebook)."""
+    evaluated on PROBE rows only). Each sub-codebook is ONE nested-array
+    Literal folded by one transform: with per-centroid qdot branches
+    the expression tree grows ∝ ks·m and Catalyst/codegen pay seconds
+    of compile per plan (measured: ~5 s per fresh 128-branch plan at
+    2000 rows); the literal keeps the tree a constant size."""
     def dot_fn(sub):
         # closure factory keeps the HOF lambda unary (CLAUDE.md arity)
         def f(cvec):
@@ -1072,8 +1052,11 @@ def _pq_tbl(pq_col, books: list[list[list[int]]]) -> F.Column:
 
     cols = []
     for mi, book in enumerate(books):
-        cbs, _ = _codebook_lits(book)
-        cols.append(F.transform(cbs, dot_fn(_pq_sub(pq_col, mi))))
+        cbs = F.lit([[int(v) for v in c] for c in book]).cast(
+            "array<array<bigint>>"
+        )
+        sub = F.slice(pq_col, mi * PQ_SUB + 1, PQ_SUB)
+        cols.append(F.transform(cbs, dot_fn(sub)))
     return F.array(*cols)
 
 
@@ -1110,12 +1093,9 @@ def ivf_pq_topk(
     q = embeddings.select(
         "vec_id", quantized(F.col("embedding")).alias("q")
     ).withColumn("n2", qnorm2(F.col("q")))
-    qa = ivf_assign(q, centroids, n_probe)
+    qa = _assign(q, centroids, n_probe, books)
     index = qa.select(
-        "vec_id",
-        F.element_at("ranked", 1).alias("list_id"),
-        _pq_code(F.col("q"), books).alias("code"),
-        "n2",
+        "vec_id", F.element_at("ranked", 1).alias("list_id"), "code", "n2"
     )
     probes = qa.filter(F.col("vec_id") % PROBE_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
@@ -1206,25 +1186,20 @@ def ivf_pq_topk_sql(
     centroids: list[list[int]] | None = None,
     pq_books: list[list[list[int]]] | None = None,
 ) -> str:
-    """DuckDB twin: codes via per-sub-space list_sort-of-structs argmin
-    (DuckDB sorts structs field-lexicographically — the same (nd, j)
-    order as Spark's array_sort), ADC via the same per-probe table +
-    m-lookup sum, both pure int64. CTEs materialized: qt/codes/probes
+    """DuckDB twin: coarse lists via :func:`_nearest_centroid_sql`;
+    codes via per-sub-space list_sort-of-structs argmin (DuckDB sorts
+    structs field-lexicographically — the same (nd, j) order as the
+    Spark kernel's stable argsort); ADC via the same per-probe table +
+    m-lookup sum, all pure int64. CTEs materialized: qt/codes/probes
     are each consumed by several downstream stages and inlining would
     re-evaluate the 128-dot code expressions per consumer."""
-    cents = IVF_CENTROIDS if centroids is None else centroids
     books = DEFAULT_PQ_BOOKS if pq_books is None else pq_books
     q = quantized_sql("embedding")
+    scores, rank = _nearest_centroid_sql(centroids)
 
     def lit(vs):
         return "[" + ", ".join(str(v) for v in vs) + "]"
 
-    per_list = "\n            UNION ALL ".join(
-        f"SELECT vec_id, {j} AS j, "
-        f"CAST({sum(v * v for v in c)} AS BIGINT) - 2 * "
-        f"{qdot_sql('q', lit(c))} AS nd FROM qt"
-        for j, c in enumerate(cents)
-    )
     code_exprs = ", ".join(
         "list_sort(["
         + ", ".join(
@@ -1250,13 +1225,10 @@ def ivf_pq_topk_sql(
             SELECT vec_id, {q} AS q, {qdot_sql(q, q)} AS n2 FROM embeddings
         ),
         scores AS (
-            {per_list}
+            {scores}
         ),
         ranked AS MATERIALIZED (
-            SELECT vec_id, j,
-                   row_number() OVER (PARTITION BY vec_id
-                        ORDER BY nd ASC, j ASC) AS rn
-            FROM scores
+            {rank}
         ),
         assign AS (SELECT vec_id, j AS list_id FROM ranked WHERE rn = 1),
         codes AS MATERIALIZED (
@@ -1396,7 +1368,7 @@ def semantic_dedup(
     """(vec_id, list_id, kept): SemDeDup-style semantic deduplication.
 
     Assignment reuses the IVF coarse quantizer (nearest centroid under
-    exact-int64 L2, :func:`_ivf_ranked_lists` — train with
+    exact-int64 L2, :func:`ivf_assign` — train with
     :func:`train_ivf_codebook_df` for a data-fitted codebook). A vector
     is PRUNED iff some lower-``vec_id`` vector in the SAME cluster is
     within the cosine threshold — tested with the integer inequality
@@ -1410,9 +1382,12 @@ def semantic_dedup(
     always kept.
 
     Scale: one shuffle on ``list_id`` for the self-join (pair work
-    bounded by cluster size; AQE skew-join splits a hot cluster), then
-    the pruned-id set — tiny relative to the corpus — broadcasts back
-    onto the assignment frame. The list count is no longer a constant:
+    bounded by cluster size; AQE skew-join splits a hot cluster). The
+    join keeps each vector's pair with itself, so one aggregate per
+    (list_id, vec_id) — already clustered by the join's ``list_id``
+    partitioning — yields every vector's flag: the assignment (one
+    kernel pass per join side) is never joined back. The list count is
+    no longer a constant:
     training derives k from the corpus count (:func:`derive_k_lists`,
     average cluster ≈ TARGET_LIST_SIZE) exactly as the paper trains
     more clusters at larger scale — so the O(cluster²) pair work stays
@@ -1433,27 +1408,19 @@ def semantic_dedup(
         "list_id",
     )
     d = qdot(F.col("qa"), F.col("q"))
-    pruned = (
-        assigned.join(earlier, "list_id")
-        .filter(F.col("id_a") < F.col("vec_id"))
-        .filter(
-            (d > 0)
-            & (
-                F.lit(den * den) * d * d
-                >= F.lit(num * num) * F.col("na2") * F.col("n2")
-            )
+    near = (
+        (F.col("id_a") < F.col("vec_id"))
+        & (d > 0)
+        & (
+            F.lit(den * den) * d * d
+            >= F.lit(num * num) * F.col("na2") * F.col("n2")
         )
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(True))
     )
     return (
-        assigned.join(broadcast(pruned), "vec_id", "left")
-        .select(
-            "vec_id",
-            "list_id",
-            F.coalesce(~F.col("is_pruned"), F.lit(True)).alias("kept"),
-        )
+        assigned.join(earlier, "list_id")
+        .filter(F.col("id_a") <= F.col("vec_id"))
+        .groupBy("vec_id", "list_id")
+        .agg((~F.bool_or(near)).alias("kept"))
     )
 
 
@@ -1462,28 +1429,19 @@ def semantic_dedup_sql(
     num: int = SEMDEDUP_NUM,
     den: int = SEMDEDUP_DEN,
 ) -> str:
-    cents = IVF_CENTROIDS if centroids is None else centroids
     q = quantized_sql("embedding")
-    per_list = "\n            UNION ALL ".join(
-        f"SELECT vec_id, {j} AS j, "
-        f"CAST({sum(v * v for v in c)} AS BIGINT) - 2 * "
-        f"{qdot_sql('q', '[' + ', '.join(str(v) for v in c) + ']')} AS nd FROM qt"
-        for j, c in enumerate(cents)
-    )
+    scores, rank = _nearest_centroid_sql(centroids, margin=16)
     dot = qdot_sql("a.q", "b.q")
     return f"""
         WITH qt AS (
             SELECT vec_id, {q} AS q, {qdot_sql(q, q)} AS n2 FROM embeddings
         ),
         scores AS (
-            {per_list}
+            {scores}
         ),
         assign AS (
             SELECT vec_id, j AS list_id FROM (
-                SELECT vec_id, j,
-                       row_number() OVER (PARTITION BY vec_id
-                            ORDER BY nd ASC, j ASC) AS rn
-                FROM scores
+                {rank}
             ) WHERE rn = 1
         ),
         av AS (

@@ -293,10 +293,18 @@ def resolve_key_buckets(store_root: str, requested: int | None) -> int | None:
     """The store's committed bucket count wins (the partition layout is
     physical — changing it mid-store would split each logical bucket
     across directories); an explicit conflicting request is an error,
-    not a silent reshard. Returns None when nothing is committed and
-    nothing was requested — the first non-empty batch then derives and
-    commits a value."""
+    not a silent reshard. A store that holds band data but no meta file
+    predates the meta: its layout is the legacy fixed LSH_KEY_BUCKETS,
+    which is committed now (deriving a fresh value would silently miss
+    every pair stored under the old modulus). Returns None when nothing
+    is committed and nothing was requested — the first non-empty batch
+    then derives and commits a value."""
+    from ..storage.snapshot import SnapshotTable
+
     committed = _read_key_buckets(store_root)
+    if committed is None and SnapshotTable(store_root, "lsh_bands").exists():
+        committed = LSH_KEY_BUCKETS
+        _commit_key_buckets(store_root, committed)
     if committed is not None:
         if requested is not None and requested != committed:
             raise ValueError(
@@ -408,11 +416,12 @@ def _lsh_process_batch(
     raw_bands = band_rows(sigs).persist()
     n_new_bands = raw_bands.count()
     if key_buckets is None:
-        # first-batch derivation: the store's committed value wins; else
-        # size from THIS batch's band volume and commit it (the layout
-        # is physical — every later batch and process must agree)
+        # first-batch derivation: the store's committed (or legacy
+        # pre-meta) value wins; else size from THIS batch's band volume
+        # and commit it (the layout is physical — every later batch and
+        # process must agree)
         assert store_root is not None, "key_buckets=None needs store_root"
-        key_buckets = _read_key_buckets(store_root)
+        key_buckets = resolve_key_buckets(store_root, None)
         if key_buckets is None:
             key_buckets = derive_key_buckets(n_new_bands)
             _commit_key_buckets(store_root, key_buckets)

@@ -4,15 +4,16 @@ The batch ANN path (``operators/similarity.ivf_topk``) re-assigns the
 whole corpus per query; a training-data pipeline ingests embeddings
 continuously. This module maintains the FAISS-shaped inverted-list
 layout AS A TABLE: each micro-batch of vectors is quantized, assigned
-to its nearest coarse centroid (the codebook is a plan literal —
-broadcast by construction, zero shuffle for assignment), and appended
-to a ``list_id``-partitioned SnapshotTable. Queries prune to the
-n_probe nearest lists' partitions — the storage layout IS the index.
+to its nearest coarse centroid (the batch operator's ``ivf_assign``
+kernel: one int64 GEMM per Arrow batch against the broadcast codebook,
+zero shuffle for assignment), and appended to a ``list_id``-partitioned
+SnapshotTable. Queries prune to the n_probe nearest lists' partitions —
+the storage layout IS the index.
 
-Assignment per row is the same pure-int64 function the batch operator
-uses, so querying the streamed store is EXACTLY the batch answer on
-the union of ingested batches (asserted in tests), independent of how
-arrival split the corpus.
+Ingest and query call the same ``ivf_assign`` as the batch operator,
+so querying the streamed store is EXACTLY the batch answer on the
+union of ingested batches (asserted in tests, default and trained
+big-k codebooks), independent of how arrival split the corpus.
 
 Reference parity: VisualIndexerBolt.java hands vectors to an external
 index service at ingestion; here the index is Spark-native storage +
@@ -30,7 +31,7 @@ from ..operators.similarity import (
     PROBE_MOD,
     TOP_K,
     _cosine_display,
-    _ivf_ranked_lists,
+    ivf_assign,
     qdot,
     qnorm2,
     quantized,
@@ -59,11 +60,8 @@ def run_streaming_ivf_ingest(
             F.col("vec_id").cast("long").alias("vec_id"),
             quantized(F.col("embedding")).alias("q"),
         ).withColumn("n2", qnorm2(F.col("q")))
-        assigned = q.select(
-            "vec_id",
-            "q",
-            "n2",
-            F.get(_ivf_ranked_lists(F.col("q"), centroids), 0).alias("list_id"),
+        assigned = ivf_assign(q, centroids, 1).select(
+            "vec_id", "q", "n2", F.element_at("ranked", 1).alias("list_id")
         ).persist()
         # empty guard: a 0-row write to a partitioned table creates a
         # data dir with no parquet files, and every later per-dir union
@@ -108,19 +106,20 @@ def ivf_index_topk(
     """Multi-probe top-k over the streamed index — same output schema
     and values as batch ``ivf_topk`` over the full ingested corpus
     (probes = stored vec_id % probe_mod == 0; their ranked lists are
-    recomputed from the stored quantized vector, a pure projection).
+    recomputed from the stored quantized vector by ``ivf_assign``, a
+    narrow map).
 
     The candidate join is ONE equi-join on list_id against the
     partitioned store; a single-list probe prunes to one partition
     directory at scan time."""
     idx = SnapshotTable(store_root, INDEX_NAME, partition_by=("list_id",)).read(spark)
-    probes = idx.filter(F.col("vec_id") % probe_mod == 0).select(
+    probes = ivf_assign(
+        idx.filter(F.col("vec_id") % probe_mod == 0), centroids, n_probe
+    ).select(
         F.col("vec_id").alias("probe_id"),
         F.col("q").alias("pq"),
         F.col("n2").alias("pn2"),
-        F.explode(
-            F.slice(_ivf_ranked_lists(F.col("q"), centroids), 1, n_probe)
-        ).alias("list_id"),
+        F.explode("ranked").alias("list_id"),
     )
     cand = probes.join(idx, "list_id").filter(F.col("vec_id") != F.col("probe_id"))
     scored = cand.select(

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+from pyspark.sql import functions as F
+
 from conftest import SF_DIR
 
 from mklab_focused_crawler_spark.operators import pipeline as P
@@ -91,3 +93,27 @@ def test_survivors_are_a_subset_with_provenance(spark, tmp_path):
     assert rows
     for r in rows:
         assert (r["doc_id"], r["source"]) in aug
+
+
+def test_default_workdir_is_private_per_call(spark):
+    """Two builds in one process with the DEFAULT workdir must not share
+    intermediate tables: the first build's frame, collected after a
+    second build over other documents, equals a build of the first
+    document set alone."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    first = docs.filter(F.col("doc_id") % 2 == 0)
+    second = docs.filter(F.col("doc_id") % 2 == 1)
+    caches: list = []
+    try:
+        df_first = P.pipeline_e2e(spark, first, caches=caches)
+        df_second = P.pipeline_e2e(spark, second, caches=caches)
+        got = sorted(tuple(r) for r in df_first.collect())
+        other = sorted(tuple(r) for r in df_second.collect())
+        alone = sorted(
+            tuple(r) for r in P.pipeline_e2e(spark, first, caches=caches).collect()
+        )
+    finally:
+        for f in caches:
+            f.unpersist()
+    assert got == alone and got
+    assert got != other

@@ -247,10 +247,10 @@ def test_derived_k_lists_scales_and_twins_agree(spark, tmp_path):
     emb = _clustered_embeddings(spark, n_clusters=80, per_cluster=110)
     n = emb.count()
     k = sim.derive_k_lists(n)
-    # the corpus genuinely changes the value AND crosses the assignment
-    # regime boundary: this parity run exercises the Arrow GEMM
-    # nearest-centroid kernel against the DuckDB relational argmin
-    assert k > sim.IVF_EXPR_MAX_K > sim.K_LISTS
+    # the corpus genuinely changes the value: this parity run exercises
+    # the Arrow GEMM nearest-centroid kernel at a derived k against the
+    # DuckDB relational argmin
+    assert k > sim.K_LISTS
 
     path = str(tmp_path / "emb.parquet")
     pdf = emb.toPandas()
@@ -276,3 +276,35 @@ def test_derived_k_lists_scales_and_twins_agree(spark, tmp_path):
         for r in con.sql(sim.ivf_topk_sql(centroids=cents_pq)).fetchall()
     )
     assert got_ivf == want_ivf and len(got_ivf) > 0
+
+
+def test_pq_training_sample_matches_coarse_sample(spark, tmp_path, monkeypatch):
+    """The PQ sub-quantizers train on the SAME decimated sample as the
+    coarse quantizer — the modulus derives from the corpus-derived list
+    count in both — once that count leaves the K_LISTS floor (8,800
+    vectors → k=68 lists), and the df and parquet PQ twins agree."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    emb = _clustered_embeddings(spark, n_clusters=80, per_cluster=110)
+    n = emb.count()
+    assert sim.derive_k_lists(n) > sim.K_LISTS
+
+    mods = []
+    real = sim.train_sample_mod
+
+    def spy(*args, **kwargs):
+        mods.append(real(*args, **kwargs))
+        return mods[-1]
+
+    monkeypatch.setattr(sim, "train_sample_mod", spy)
+    sim.train_ivf_codebook_df(emb)
+    books_df = sim.train_pq_codebooks_df(emb)
+    assert len(mods) == 2 and mods[0] == mods[1], mods
+
+    path = str(tmp_path / "emb.parquet")
+    pq.write_table(
+        pa.Table.from_pandas(emb.toPandas(), preserve_index=False), path
+    )
+    assert sim.train_pq_codebooks_parquet(path) == books_df
+    assert mods[2] == mods[0]

@@ -333,57 +333,78 @@ def test_streaming_lsh_deduplicates_like_batch(spark, tmp_path):
 def test_streaming_ivf_index_matches_batch(spark, tmp_path):
     """Incremental IVF index: stream the embeddings in 3 micro-batches,
     then query the list-partitioned store — must equal batch ivf_topk
-    over the full corpus exactly (assignment is the same pure-int64
-    function per row, so only the plumbing can break this)."""
+    over the full corpus exactly (ingest, query and batch share the one
+    ivf_assign kernel, so only the plumbing can break this). Two inputs:
+    the fixture corpus under the default codebook, and a clustered
+    corpus under a trained codebook with k=72 lists (above the old
+    64-list expression/kernel boundary, which the streaming path used
+    to bypass)."""
     import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    from test_similarity import _clustered_embeddings
 
-    from mklab_focused_crawler_spark.operators.similarity import ivf_topk
+    from mklab_focused_crawler_spark.operators import similarity as sim
     from mklab_focused_crawler_spark.streaming.similarity import (
         ivf_index_topk,
         run_streaming_ivf_ingest,
     )
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+    fixture = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    in_dir = tmp_path / "in_ivf"
-    in_dir.mkdir()
-    pdf = emb.toPandas()
-    for i in range(3):
-        part = pdf[pdf.vec_id % 3 == i]
-        p = in_dir / f"batch_{i}.parquet"
-        pq.write_table(pa.Table.from_pandas(part, preserve_index=False), str(p))
-        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+    # float32-exact values: the cast only matches the stream's schema
+    clustered = _clustered_embeddings(
+        spark, n_clusters=24, per_cluster=30
+    ).withColumn("embedding", F.col("embedding").cast("array<float>"))
+    trained = sim.train_ivf_codebook(
+        ((r["vec_id"], r["embedding"]) for r in clustered.collect()), k=72
     )
-    store = str(tmp_path / "ivf_store")
-    index = run_streaming_ivf_ingest(
-        stream, store, str(tmp_path / "ckpt_ivf"), compact_every=2
-    )
+    assert len(trained) > 64 > sim.K_LISTS
 
     cols = ("probe_id", "vec_id", "list_id", "rank", "dot_q", "cosine")
-    got = {tuple(r[c] for c in cols) for r in ivf_index_topk(spark, store).collect()}
-    want = {tuple(r[c] for c in cols) for r in ivf_topk(emb).collect()}
-    assert got == want and len(want) > 0
-    # the storage layout IS the index: hive partition dirs per list
-    data_dirs = [
-        os.path.join(index.data_dir, d) for d in os.listdir(index.data_dir)
-    ]
-    assert any(
-        e.startswith("list_id=") for d in data_dirs for e in os.listdir(d)
-    )
-    # maintenance ran inside the stream (partition-scoped): after the
-    # batch-1 fold + the batch-2 append, no list's live rows span more
-    # than 2 segments (one compacted + at most one post-fold append) —
-    # bounded per-list read amplification however long the stream runs
-    assert index.fragmented_partitions("list_id", min_segments=3) == []
+    for name, emb, cents in (
+        ("default", fixture, None),
+        ("trained", clustered, trained),
+    ):
+        pdf = emb.toPandas()
+        in_dir = tmp_path / f"in_ivf_{name}"
+        _write_batches(in_dir, [pdf[pdf.vec_id % 3 == i] for i in range(3)])
+        stream = (
+            spark.readStream.schema("vec_id long, embedding array<float>")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(in_dir))
+        )
+        store = str(tmp_path / f"ivf_store_{name}")
+        index = run_streaming_ivf_ingest(
+            stream,
+            store,
+            str(tmp_path / f"ckpt_ivf_{name}"),
+            centroids=cents,
+            compact_every=2,
+        )
+
+        got = {
+            tuple(r[c] for c in cols)
+            for r in ivf_index_topk(spark, store, centroids=cents).collect()
+        }
+        want = {
+            tuple(r[c] for c in cols)
+            for r in sim.ivf_topk(emb, centroids=cents).collect()
+        }
+        assert got == want and len(want) > 0, name
+        # the storage layout IS the index: hive partition dirs per list
+        data_dirs = [
+            os.path.join(index.data_dir, d) for d in os.listdir(index.data_dir)
+        ]
+        assert any(
+            e.startswith("list_id=") for d in data_dirs for e in os.listdir(d)
+        )
+        # maintenance ran inside the stream (partition-scoped): after the
+        # batch-1 fold + the batch-2 append, no list's live rows span
+        # more than 2 segments (one compacted + at most one post-fold
+        # append) — bounded per-list read amplification however long
+        # the stream runs
+        assert index.fragmented_partitions("list_id", min_segments=3) == []
 
 
 def test_streaming_duplicate_clusters_match_batch(spark, tmp_path):
@@ -1384,6 +1405,62 @@ def test_key_buckets_derivation_and_store_meta(spark, tmp_path):
         run_streaming_lsh_dedup(
             stream, store, str(tmp_path / "ckpt_derive2"), key_buckets=512
         )
+
+
+def test_legacy_lsh_store_without_meta_keeps_64_layout(spark, tmp_path):
+    """A store written under the old fixed 64-bucket layout, with no
+    lsh_meta.json, must keep that layout on reopen: deriving a fresh
+    fan-out from the incoming batch would probe other bucket dirs and
+    silently miss pairs with stored docs. A 1-doc batch alone would
+    derive 256 buckets, and stored doc 100 sits in doc bucket 36, not
+    100 — so the duplicate is found only under the legacy modulus."""
+    import os
+
+    import pandas as pd
+
+    from mklab_focused_crawler_spark.streaming.dedup import (
+        _lsh_meta_path,
+        _read_key_buckets,
+        derive_key_buckets,
+        read_streaming_lsh_pairs,
+        run_streaming_lsh_dedup,
+    )
+
+    def text(d):
+        return " ".join(f"d{d}w{i}" for i in range(12))
+
+    stored = pd.DataFrame(
+        {"doc_id": range(100, 106), "text": [text(d) for d in range(100, 106)]}
+    )
+    dup = pd.DataFrame({"doc_id": [200], "text": [text(100)]})
+    in_dir = tmp_path / "in_legacy"
+    store = str(tmp_path / "legacy_store")
+    ckpt = str(tmp_path / "ckpt_legacy")
+
+    def ingest(**kw):
+        run_streaming_lsh_dedup(
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(in_dir)),
+            store,
+            ckpt,
+            **kw,
+        )
+
+    _write_batches(in_dir, [stored])
+    ingest(key_buckets=LSH_KEY_BUCKETS)
+    os.remove(_lsh_meta_path(store))  # a store from before the meta file
+    assert derive_key_buckets(32) != LSH_KEY_BUCKETS  # 1 doc × 32 bands
+
+    # the same stream resumes (same checkpoint) with one more file
+    _write_batches(in_dir, [stored, dup])
+    ingest()
+    pairs = {
+        (r["doc_a"], r["doc_b"], r["jaccard"])
+        for r in read_streaming_lsh_pairs(spark, store).collect()
+    }
+    assert (100, 200, 1.0) in pairs
+    assert _read_key_buckets(store) == LSH_KEY_BUCKETS  # now committed
 
 
 def test_min_label_propagation_long_chain_converges_logarithmically(spark):
