@@ -38,7 +38,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import uuid
 
 
 def _session(master: str | None):
@@ -320,13 +322,35 @@ def _run_stream(args) -> dict:
     return {"op": args.op, "store": args.store, "drained": True}
 
 
+def _write_then_rename(df, out: str) -> None:
+    """Write ``df`` as parquet to a fresh directory beside ``out``, then
+    rename it into place: a job that dies mid-write leaves the previous
+    ``out`` as it was (and removes its own partial directory). The swap
+    itself is two renames; only a crash between them leaves the
+    previous map under ``<out>.old-*`` instead of at ``out``."""
+    base = os.path.normpath(out)
+    tag = uuid.uuid4().hex
+    tmp, old = f"{base}.tmp-{tag}", f"{base}.old-{tag}"
+    try:
+        df.write.parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if os.path.exists(base):
+        os.rename(base, old)
+    os.rename(tmp, base)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def _run_pipeline(args) -> dict:
     """The composed pipeline as a batch job: read documents, run every
     hygiene stage, write the (shard, chunk, piece → provenance) map.
     The intermediate clean/prov tables land under --workdir and are the
     job's restart points (re-running overwrites them). They live beside
-    --out, never inside it: the final overwrite of --out would delete
-    them while the plan still reads them."""
+    --out, never inside it: replacing --out would delete them while the
+    plan still reads them. The map itself is written beside --out and
+    renamed into place (local paths), so a failed run leaves the
+    previous --out intact."""
     from .operators.pipeline import pipeline_e2e
 
     workdir = args.workdir or os.path.normpath(args.out) + "_stages"
@@ -339,7 +363,7 @@ def _run_pipeline(args) -> dict:
     spark = _session(args.master)
     docs = spark.read.parquet(args.in_path)
     out = pipeline_e2e(spark, docs, workdir=workdir)
-    out.write.mode("overwrite").parquet(args.out)
+    _write_then_rename(out, args.out)
     n = spark.read.parquet(args.out).count()
     return {
         "out": args.out,

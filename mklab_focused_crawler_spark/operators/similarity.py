@@ -27,6 +27,7 @@ crossing per batch, exact on both engines).
 from __future__ import annotations
 
 import hashlib
+import itertools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -230,9 +231,10 @@ def cosine_topk_gemm(
     size, the per-task (batch × chunk) dot matrix AND the driver frame:
     chunk ids are assigned once (row_number over the vec_id total order
     on the persisted probe frame) and each chunk is collected by
-    equality filter, so a 10^6-probe workload costs ⌈probes/chunk⌉
-    corpus scans plus ⌈probes/chunk⌉ cached probe scans — no per-chunk
-    sort jobs — and one chunk of driver memory instead of an OOM."""
+    equality filter until one comes back short, so a 10^6-probe workload
+    costs ⌈probes/chunk⌉ corpus scans plus at most ⌈probes/chunk⌉+1
+    cached probe scans — no count job, no per-chunk sort jobs — and one
+    chunk of driver memory instead of an OOM."""
     import numpy as np
 
     q = embeddings.select(
@@ -256,12 +258,6 @@ def cosine_topk_gemm(
         .persist()
     )
     spark = embeddings.sparkSession
-    n_probes = probe_set.count()
-    if n_probes == 0:
-        probe_set.unpersist()
-        return spark.createDataFrame(
-            [], "probe_id long, vec_id long, rank int, dot_q long, cosine double"
-        )
 
     def make_kernel(bp):
         def kernel(batches):
@@ -301,15 +297,18 @@ def cosine_topk_gemm(
     # full probe set — only one chunk's (id, vector, norm) rows at a
     # time plus the 2-int-per-probe norm ledger. Chunk membership can't
     # affect the result (each probe's rows live in exactly one chunk).
+    # Chunks are fetched until one comes back short or empty — no
+    # separate count job (the first fetch fills the persisted frame)
     cand = None
     pn2_rows: list[tuple[int, int]] = []
-    n_chunks = (n_probes + chunk - 1) // chunk
-    for ci in range(n_chunks):
+    for ci in itertools.count():
         part = (
             probe_set.filter(F.col("chunk_id") == ci)
             .select("vec_id", "q", "n2")
             .toPandas()
         )
+        if len(part) == 0:
+            break
         probe_ids = part["vec_id"].to_numpy().astype(np.int64)
         pmat = np.stack([np.asarray(v, dtype=np.int64) for v in part["q"]])
         pn2 = part["n2"].to_numpy().astype(np.int64)
@@ -319,7 +318,13 @@ def cosine_topk_gemm(
             make_kernel(bp), "probe_id long, vec_id long, dot_q long, n2 long"
         )
         cand = piece if cand is None else cand.unionByName(piece)
+        if len(part) < chunk:
+            break
     probe_set.unpersist()  # all chunks fetched driver-side above
+    if cand is None:
+        return spark.createDataFrame(
+            [], "probe_id long, vec_id long, rank int, dot_q long, cosine double"
+        )
     pn2_df = broadcast(
         spark.createDataFrame(pn2_rows, "probe_id long, pn2 long")
     )
@@ -1382,11 +1387,12 @@ def semantic_dedup(
     always kept.
 
     Scale: one shuffle on ``list_id`` for the self-join (pair work
-    bounded by cluster size; AQE skew-join splits a hot cluster). The
-    join keeps each vector's pair with itself, so one aggregate per
-    (list_id, vec_id) — already clustered by the join's ``list_id``
-    partitioning — yields every vector's flag: the assignment (one
-    kernel pass per join side) is never joined back. The list count is
+    bounded by cluster size; AQE skew-join splits a hot cluster), placed
+    above the assignment so both join sides reuse it: the kernel runs
+    once per call. The join keeps each vector's pair with itself, so
+    one aggregate per (list_id, vec_id) — already clustered by the
+    join's ``list_id`` partitioning — yields every vector's flag: the
+    assignment is never joined back. The list count is
     no longer a constant:
     training derives k from the corpus count (:func:`derive_k_lists`,
     average cluster ≈ TARGET_LIST_SIZE) exactly as the paper trains
@@ -1395,11 +1401,18 @@ def semantic_dedup(
     q = embeddings.select(
         "vec_id", quantized(F.col("embedding")).alias("q")
     ).withColumn("n2", qnorm2(F.col("q")))
-    assigned = ivf_assign(q, centroids, 1).select(
-        "vec_id",
-        "q",
-        "n2",
-        F.element_at("ranked", 1).alias("list_id"),
+    # ONE exchange on list_id directly above the kernel: both join sides
+    # read it (the second is a reused exchange), so the Arrow kernel runs
+    # in one Python stage, not once per side
+    assigned = (
+        ivf_assign(q, centroids, 1)
+        .select(
+            "vec_id",
+            "q",
+            "n2",
+            F.element_at("ranked", 1).alias("list_id"),
+        )
+        .repartition("list_id")
     )
     earlier = assigned.select(
         F.col("vec_id").alias("id_a"),

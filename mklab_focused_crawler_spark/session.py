@@ -4,14 +4,58 @@ Defaults tuned for the sandbox (local[N], single JVM) but every knob is
 what we would set on a real multi-executor cluster: AQE on (runtime
 coalesce + skew-join splitting complements our explicit salting),
 shuffle partitions sized to cores (not the 200 default), Arrow enabled
-for the pandas-UDF kernels, PySpark's per-call call-site capture off.
+for the pandas-UDF kernels, PySpark's per-call call-site capture off,
+and — where the Python workers can import this package — the worker
+daemon of ``pydaemon.py`` (the stock daemon without its per-task
+re-parse of every zip archive on the worker path).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+PYDAEMON_MODULE = "mklab_focused_crawler_spark.pydaemon"
+# the directory holding the package; None when the package is imported
+# from an archive (spark-submit --py-files), which a daemon started with
+# ``python -m`` cannot see
+_pkg_dir = os.path.dirname(os.path.abspath(__file__))
+PACKAGE_ROOT = os.path.dirname(_pkg_dir) if os.path.isdir(_pkg_dir) else None
+
+
+def pydaemon_module(
+    master: str, cwd: str, pythonpath: str, package_root: str | None = PACKAGE_ROOT
+) -> str | None:
+    """``spark.python.daemon.module`` for this session, or None for the
+    stock daemon. The daemon starts as ``python -m <module>`` in the
+    JVM's working directory with the JVM's PYTHONPATH (plus Spark's own
+    zips), so the module is only safe where those reach the package
+    directory: local mode (one JVM, no executor working directories),
+    with the package root the cwd or a PYTHONPATH entry. A daemon
+    module that fails to import would fail every Python task."""
+    if package_root is None or not re.fullmatch(r"local(\[.*\])?", master):
+        return None
+    root = os.path.realpath(package_root)
+    entries = [cwd] + [p for p in pythonpath.split(os.pathsep) if p]
+    # a relative entry resolves against the daemon's cwd
+    if any(os.path.realpath(os.path.join(cwd, p)) == root for p in entries):
+        return PYDAEMON_MODULE
+    return None
+
+
+def _worker_start_env() -> tuple[str, str]:
+    """(cwd, PYTHONPATH) a local-mode Python daemon starts with: the
+    JVM's, fixed when the gateway launched (maybe by an earlier
+    session, before a chdir)."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return os.getcwd(), os.environ.get("PYTHONPATH", "")
+    system = jvm.java.lang.System
+    return system.getProperty("user.dir"), system.getenv("PYTHONPATH") or ""
 
 
 def get_spark(
@@ -51,6 +95,9 @@ def get_spark(
         # iteration (a ~120 KB projection among them)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
+    daemon = pydaemon_module(master, *_worker_start_env())
+    if daemon is not None:
+        builder = builder.config("spark.python.daemon.module", daemon)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # diagnostics hook: SPARK_GRAFT_CONF="k=v;k=v" (e.g. event log for

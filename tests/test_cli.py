@@ -397,3 +397,63 @@ def test_cli_pipeline_rerun_keeps_restart_tables(spark, tmp_path, capsys):
         assert spark.read.parquet(os.path.join(out_dir + "_stages", table)).count() > 0
     with pytest.raises(SystemExit):
         main(argv + ["--workdir", os.path.join(out_dir, "_stages")])
+
+
+def test_cli_pipeline_failed_write_keeps_previous_out(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """A run that dies while writing the final map leaves the previous
+    --out readable and byte-for-byte unchanged, with no partial
+    directory beside it; a rerun then equals the uninterrupted run."""
+    from pyspark.sql import DataFrameWriter
+
+    out_dir = str(tmp_path / "pipe_out")
+    argv = [
+        "pipeline",
+        "--in",
+        f"{SF_DIR}/documents.parquet",
+        "--out",
+        out_dir,
+        "--master",
+        "local[4]",
+    ]
+
+    def files() -> dict[str, bytes]:
+        got = {}
+        for d, _, names in os.walk(out_dir):
+            for name in names:
+                with open(os.path.join(d, name), "rb") as f:
+                    got[os.path.relpath(os.path.join(d, name), out_dir)] = f.read()
+        return got
+
+    main(argv)
+    capsys.readouterr()
+    before = files()
+    rows = sorted(spark.read.parquet(out_dir).collect())
+    assert rows
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_on_final_write(self, path, *args, **kwargs):
+        if os.path.dirname(os.path.normpath(path)) != str(tmp_path):
+            return real_parquet(self, path, *args, **kwargs)  # workdir stages
+        # an overwrite clears its target first, then dies part-way
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        with open(os.path.join(path, "part-00000.parquet"), "wb") as f:
+            f.write(b"PAR1")
+        raise RuntimeError("injected failure during the final write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_final_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        main(argv)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    assert files() == before
+    assert sorted(spark.read.parquet(out_dir).collect()) == rows
+    assert sorted(os.listdir(tmp_path)) == ["pipe_out", "pipe_out_stages"]
+
+    main(argv)
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert res["done"] and res["rows"] == len(rows)
+    assert sorted(spark.read.parquet(out_dir).collect()) == rows
+    assert sorted(os.listdir(tmp_path)) == ["pipe_out", "pipe_out_stages"]

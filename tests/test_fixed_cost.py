@@ -6,17 +6,30 @@ claimed batch is paid once per session, not once per iteration.
   recompiled because a per-iteration literal sits inside it);
 - SnapshotTable's schema memo (reads stop re-inferring the schema, and
   every commit that changes the schema is seen);
-- the once-per-session expression cache (functions/exprcache.py).
+- the once-per-session expression cache (functions/exprcache.py);
+- a Python stage pays for its kernel, not for re-parsing every zip
+  archive on the worker path each task (pydaemon.py), and an Arrow
+  kernel's output is evaluated once per query (semantic_dedup).
 """
 
 from __future__ import annotations
 
+import importlib
+import os
+import subprocess
+import sys
+import textwrap
+import uuid
+import zipfile
+import zipimport
 from collections import Counter
 
 from pyspark.sql import functions as F
 
+from mklab_focused_crawler_spark import pydaemon, session
 from mklab_focused_crawler_spark.functions import exprcache
 from mklab_focused_crawler_spark.operators import crawl, extraction
+from mklab_focused_crawler_spark.operators import similarity as sim
 from mklab_focused_crawler_spark.operators.crawl import (
     BROADCAST_ANTI_MAX_KEYS,
     CrawlLoop,
@@ -31,6 +44,7 @@ from mklab_focused_crawler_spark.sources.synthetic_web import (
     synthetic_fetch,
 )
 from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
+from tests.conftest import SF01_DIR
 
 MAX_JOBS_PER_ITERATION = 7
 MAX_RECOMPILED_SOURCE_BYTES = 20_000
@@ -185,3 +199,168 @@ def test_expression_cache_self_union_and_rebuild(spark, monkeypatch):
     assert k2 is not k1
     monkeypatch.undo()
     assert extraction._native_kernel("html") is not k2
+
+
+def _write_module_zip(archive, module: str, value: int) -> None:
+    # a rewrite, as a redeploy does it: a new file moved over the old one
+    tmp = f"{archive}.next"
+    with zipfile.ZipFile(tmp, "w") as z:
+        z.writestr(f"{module}.py", f"VALUE = {value}\n")
+    os.replace(tmp, archive)
+
+
+def test_zip_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """With pydaemon's patch, invalidating an unchanged archive reads
+    nothing; a rewritten archive is re-read, and a module only the new
+    archive holds becomes importable."""
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )  # restored after the test
+    pydaemon.install()
+    pydaemon.install()  # idempotent: still one wrapper
+    archive = str(tmp_path / "shipped.zip")
+    tag = uuid.uuid4().hex[:8]
+    old_mod, new_mod = f"zipped_old_{tag}", f"zipped_new_{tag}"
+    _write_module_zip(archive, old_mod, 1)
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport,
+        "_read_directory",
+        lambda path: reads.append(path) or read_directory(path),
+    )
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module(old_mod).VALUE == 1
+        importlib.invalidate_caches()  # records the archive's key
+        n = reads.count(archive)
+        for _ in range(5):
+            importlib.invalidate_caches()
+        assert reads.count(archive) == n  # unchanged: not re-read
+
+        _write_module_zip(archive, new_mod, 2)
+        importlib.invalidate_caches()
+        assert reads.count(archive) == n + 1  # rewritten: re-read once
+        assert importlib.import_module(new_mod).VALUE == 2
+        importlib.invalidate_caches()
+        assert reads.count(archive) == n + 1
+    finally:
+        sys.modules.pop(old_mod, None)
+        sys.modules.pop(new_mod, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_pyfile_shipped_to_warm_workers_is_importable(spark, tmp_path):
+    """The contract invalidate_caches exists for: a module shipped with
+    addPyFile (as a zip or as a .py) after the Python workers are warm
+    is importable inside the next mapInPandas task — here on workers
+    forked from pydaemon, with its patch live."""
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.python.daemon.module") == session.PYDAEMON_MODULE
+
+    def probe(batches):
+        import zipimport
+
+        method = zipimport.zipimporter.invalidate_caches
+        patched = getattr(method, "_reads_on_change", False)
+        for pdf in batches:
+            yield pdf.assign(patched=patched)
+
+    warm = spark.range(0, 64, 1, 8).mapInPandas(probe, "id long, patched boolean")
+    assert all(r.patched for r in warm.collect())
+
+    tag = uuid.uuid4().hex[:8]
+    zmod, pmod = f"shipped_zip_{tag}", f"shipped_py_{tag}"
+    archive = str(tmp_path / f"{zmod}.zip")
+    _write_module_zip(archive, zmod, 7)
+    (tmp_path / f"{pmod}.py").write_text("VALUE = 11\n")
+    sc.addPyFile(archive)
+    sc.addPyFile(str(tmp_path / f"{pmod}.py"))
+
+    def use(batches):
+        import importlib
+
+        value = sum(importlib.import_module(m).VALUE for m in (zmod, pmod))
+        for pdf in batches:
+            yield pdf.assign(v=value)
+
+    got = spark.range(0, 64, 1, 8).mapInPandas(use, "id long, v long").collect()
+    assert len(got) == 64 and {r.v for r in got} == {18}
+
+
+def test_semantic_dedup_runs_its_kernel_once(spark):
+    """One exchange on list_id sits above the assignment kernel and both
+    self-join sides read it: the executed (final adaptive) plan holds
+    exactly one MapInPandas, the other side a reused exchange."""
+    emb = spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
+    df = sim.semantic_dedup(emb)
+    assert df.count() == emb.count()
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert "isFinalPlan=true" in adaptive.toString()
+    final = adaptive.executedPlan().toString()
+    assert final.count("MapInPandas") == 1, final
+    assert "ReusedExchange" in final, final
+
+
+def test_pydaemon_module_only_where_workers_import_the_package(tmp_path):
+    """The daemon module is set only for a local master whose daemon
+    starts with the package root on its path (cwd or PYTHONPATH), and
+    never when the package itself came from an archive."""
+    root = session.PACKAGE_ROOT
+    other = str(tmp_path)
+    mod = session.PYDAEMON_MODULE
+    assert root is not None
+    assert session.pydaemon_module("local[8]", root, "") == mod
+    both = os.pathsep.join([other, root])
+    assert session.pydaemon_module("local", other, both) == mod
+    assert session.pydaemon_module("local[*]", other, "") is None
+    assert session.pydaemon_module("local[4]", other, other) is None
+    rel = os.path.relpath(root, other)  # relative entries resolve against cwd
+    assert session.pydaemon_module("local[4]", other, rel) == mod
+    assert session.pydaemon_module("local[4]", os.path.join(other, "sub"), rel) is None
+    for master in ("local-cluster[2,1,1024]", "yarn", "spark://host:7077"):
+        assert session.pydaemon_module(master, root, root) is None
+    assert session.pydaemon_module("local[8]", root, root, package_root=None) is None
+
+
+def test_stock_daemon_branch_runs_arrow_kernels(tmp_path):
+    """A session whose workers cannot import the package (cwd elsewhere,
+    no PYTHONPATH) keeps the stock daemon, and Arrow kernels run."""
+    script = tmp_path / "stock_daemon.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {session.PACKAGE_ROOT!r})
+            from mklab_focused_crawler_spark.session import get_spark
+
+            spark = get_spark("stock_daemon", master="local[2]", shuffle_partitions=2)
+            conf = spark.sparkContext.getConf()
+            assert conf.get("spark.python.daemon.module") is None
+
+            def double(batches):
+                for pdf in batches:
+                    yield pdf.assign(v=pdf["id"] * 2)
+
+            df = spark.range(0, 10, 1, 2).mapInPandas(double, "id long, v long")
+            rows = df.collect()
+            assert sorted(r.v for r in rows) == list(range(0, 20, 2)), rows
+            spark.stop()
+            print("OK")
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "OK"
