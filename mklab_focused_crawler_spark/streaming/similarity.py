@@ -24,15 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..operators.similarity import (
     N_PROBE,
     PROBE_MOD,
     TOP_K,
-    _cosine_display,
     ivf_assign,
-    qdot,
+    ivf_probe_topk,
     qnorm2,
     quantized,
 )
@@ -109,39 +107,11 @@ def ivf_index_topk(
     recomputed from the stored quantized vector by ``ivf_assign``, a
     narrow map).
 
-    The candidate join is ONE equi-join on list_id against the
-    partitioned store; a single-list probe prunes to one partition
-    directory at scan time."""
+    The candidate join and rank tail are batch ``ivf_probe_topk``: ONE
+    equi-join on list_id against the partitioned store; a single-list
+    probe prunes to one partition directory at scan time."""
     idx = SnapshotTable(store_root, INDEX_NAME, partition_by=("list_id",)).read(spark)
-    probes = ivf_assign(
+    probe_rows = ivf_assign(
         idx.filter(F.col("vec_id") % probe_mod == 0), centroids, n_probe
-    ).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("q").alias("pq"),
-        F.col("n2").alias("pn2"),
-        F.explode("ranked").alias("list_id"),
-    )
-    cand = probes.join(idx, "list_id").filter(F.col("vec_id") != F.col("probe_id"))
-    scored = cand.select(
-        "probe_id",
-        "vec_id",
-        "list_id",
-        qdot(F.col("pq"), F.col("q")).alias("dot_q"),
-        "pn2",
-        "n2",
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("dot_q"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "probe_id",
-            "vec_id",
-            "list_id",
-            "rank",
-            "dot_q",
-            _cosine_display(F.col("dot_q"), F.col("pn2"), F.col("n2")).alias(
-                "cosine"
-            ),
-        )
-    )
+    ).select("vec_id", "q", "n2", F.explode("ranked").alias("list_id"))
+    return ivf_probe_topk(probe_rows, idx, k)

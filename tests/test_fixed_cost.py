@@ -9,7 +9,8 @@ claimed batch is paid once per session, not once per iteration.
 - the once-per-session expression cache (functions/exprcache.py);
 - a Python stage pays for its kernel, not for re-parsing every zip
   archive on the worker path each task (pydaemon.py), and an Arrow
-  kernel's output is evaluated once per query (semantic_dedup).
+  kernel's output is evaluated once per query (semantic_dedup and
+  ivf_topk).
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import zipfile
 import zipimport
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from mklab_focused_crawler_spark import pydaemon, session
@@ -290,13 +292,21 @@ def test_pyfile_shipped_to_warm_workers_is_importable(spark, tmp_path):
     assert len(got) == 64 and {r.v for r in got} == {18}
 
 
-def test_semantic_dedup_runs_its_kernel_once(spark):
-    """One exchange on list_id sits above the assignment kernel and both
-    self-join sides read it: the executed (final adaptive) plan holds
-    exactly one MapInPandas, the other side a reused exchange."""
+@pytest.mark.parametrize(
+    "op", ["semantic_dedup", "ivf_topk", "ivf_topk_trained"]
+)
+def test_ivf_kernel_runs_once_per_query(spark, op):
+    """One exchange sits directly above the assignment kernel and both
+    join sides read it: the executed (final adaptive) plan holds exactly
+    one MapInPandas, the other side a reused exchange."""
     emb = spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
-    df = sim.semantic_dedup(emb)
-    assert df.count() == emb.count()
+    if op == "semantic_dedup":
+        df, want = sim.semantic_dedup(emb), emb.count()
+    else:
+        cents = sim.train_ivf_codebook_df(emb) if op == "ivf_topk_trained" else None
+        n_probes = emb.filter(F.col("vec_id") % sim.PROBE_MOD == 0).count()
+        df, want = sim.ivf_topk(emb, centroids=cents), n_probes * sim.TOP_K
+    assert df.count() == want
     df.collect()
     adaptive = df._jdf.queryExecution().executedPlan()
     assert "isFinalPlan=true" in adaptive.toString()

@@ -1,12 +1,16 @@
 """Similarity-operator unit tests beyond the oracle parity layer:
-GEMM probe chunking (result must be chunk-boundary-independent) and the
-deterministic IVF k-means training job (recall vs brute force)."""
+GEMM probe chunking (result must be chunk-boundary-independent), the
+deterministic IVF k-means training job (recall vs brute force), the
+argument checks that keep short results from passing silently, and the
+ordered output schema of the ANN family."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from conftest import SF01_DIR
+from pyspark.sql import functions as F
 
 from mklab_focused_crawler_spark.operators import similarity as sim
 
@@ -308,3 +312,94 @@ def test_pq_training_sample_matches_coarse_sample(spark, tmp_path, monkeypatch):
     )
     assert sim.train_pq_codebooks_parquet(path) == books_df
     assert mods[2] == mods[0]
+
+
+def test_gemm_rejects_chunk_below_one(spark):
+    """chunk < 1 raises. It used to return short without an error:
+    chunk=-1 makes floor((rn-1)/chunk) negative, so every chunk after 0
+    came back empty (1 of 10 probes), and chunk=0 failed inside a
+    cached-batch task with DIVIDE_BY_ZERO."""
+    emb = spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
+    for chunk in (-1, 0):
+        with pytest.raises(ValueError, match="chunk"):
+            sim.cosine_topk_gemm(emb, chunk=chunk)
+
+
+def test_ivf_pq_rejects_rerank_below_k(spark):
+    """rerank < k raises on both engines: the pool keeps only rerank
+    rows per probe, so the result used to hold fewer than k rows per
+    probe. rerank == k is the smallest pool that fills every probe."""
+    emb = spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
+    with pytest.raises(ValueError, match="rerank"):
+        sim.ivf_pq_topk(emb, rerank=sim.TOP_K - 1)
+    with pytest.raises(ValueError, match="rerank"):
+        sim.ivf_pq_topk_sql(rerank=sim.TOP_K - 1)
+    n_probes = emb.filter(F.col("vec_id") % sim.PROBE_MOD == 0).count()
+    assert sim.ivf_pq_topk(emb, rerank=sim.TOP_K).count() == n_probes * sim.TOP_K
+
+
+_TOPK = [
+    "probe_id:bigint",
+    "vec_id:bigint",
+    "rank:int",
+    "dot_q:bigint",
+    "cosine:double",
+]
+_IVF = _TOPK[:2] + ["list_id:int"] + _TOPK[2:]
+ANN_SCHEMAS = {
+    "cosine_topk": _TOPK,
+    "cosine_topk_gemm": _TOPK,
+    "ann_topk": _TOPK[:2] + ["bucket:int"] + _TOPK[2:],
+    "ann_topk_multi": _TOPK,
+    "ivf_topk": _IVF,
+    "ivf_pq_topk": _IVF[:4] + ["adc_q:bigint"] + _IVF[4:],
+    "ivf_index_topk": _IVF,
+    "embedding_near_dups": [
+        "id_a:bigint",
+        "id_b:bigint",
+        "dot_q:bigint",
+        "cosine:double",
+    ],
+    "semantic_dedup": ["vec_id:bigint", "list_id:int", "kept:boolean"],
+}
+
+
+def test_ann_family_output_schemas(spark, tmp_path):
+    """The ordered output schema (names, order, types) of the seven
+    top-k operators, embedding_near_dups and semantic_dedup, and the
+    column order of their DuckDB twins. The oracle compare sorts columns
+    by name, so it cannot see a reorder."""
+    import duckdb
+
+    from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
+    from mklab_focused_crawler_spark.streaming import similarity as ssim
+
+    path = f"{SF01_DIR}/embeddings.parquet"
+    emb = spark.read.parquet(path)
+    store = str(tmp_path / "ivf_store")
+    q = emb.select("vec_id", sim.quantized(F.col("embedding")).alias("q"))
+    SnapshotTable(store, ssim.INDEX_NAME, partition_by=("list_id",)).append(
+        sim.ivf_assign(q.withColumn("n2", sim.qnorm2(F.col("q"))), None, 1).select(
+            "vec_id", "q", "n2", F.element_at("ranked", 1).alias("list_id")
+        )
+    )
+    frames = {
+        "cosine_topk": sim.cosine_topk(emb),
+        "cosine_topk_gemm": sim.cosine_topk_gemm(emb),
+        "ann_topk": sim.ann_topk(emb),
+        "ann_topk_multi": sim.ann_topk_multi(emb),
+        "ivf_topk": sim.ivf_topk(emb),
+        "ivf_pq_topk": sim.ivf_pq_topk(emb),
+        "ivf_index_topk": ssim.ivf_index_topk(spark, store),
+        "embedding_near_dups": sim.embedding_near_dups(emb),
+        "semantic_dedup": sim.semantic_dedup(emb),
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    for name, df in frames.items():
+        want = ANN_SCHEMAS[name]
+        got = [f"{f.name}:{f.dataType.simpleString()}" for f in df.schema.fields]
+        assert got == want, name
+        twin = getattr(sim, f"{name}_sql", None)
+        if twin is not None:
+            assert con.sql(twin()).columns == [c.split(":")[0] for c in want], name

@@ -338,7 +338,9 @@ def test_streaming_ivf_index_matches_batch(spark, tmp_path):
     the fixture corpus under the default codebook, and a clustered
     corpus under a trained codebook with k=72 lists (above the old
     64-list expression/kernel boundary, which the streaming path used
-    to bypass)."""
+    to bypass). A third query reads the fixture store with probe_mod=10
+    (not PROBE_MOD): its probes are exactly the stored multiples of 10,
+    and its rows for multiples of PROBE_MOD equal batch ivf_topk."""
     import os
 
     from test_similarity import _clustered_embeddings
@@ -362,6 +364,7 @@ def test_streaming_ivf_index_matches_batch(spark, tmp_path):
     assert len(trained) > 64 > sim.K_LISTS
 
     cols = ("probe_id", "vec_id", "list_id", "rank", "dot_q", "cosine")
+    wants = {}
     for name, emb, cents in (
         ("default", fixture, None),
         ("trained", clustered, trained),
@@ -392,6 +395,7 @@ def test_streaming_ivf_index_matches_batch(spark, tmp_path):
             for r in sim.ivf_topk(emb, centroids=cents).collect()
         }
         assert got == want and len(want) > 0, name
+        wants[name] = want
         # the storage layout IS the index: hive partition dirs per list
         data_dirs = [
             os.path.join(index.data_dir, d) for d in os.listdir(index.data_dir)
@@ -405,6 +409,17 @@ def test_streaming_ivf_index_matches_batch(spark, tmp_path):
         # append) — bounded per-list read amplification however long
         # the stream runs
         assert index.fragmented_partitions("list_id", min_segments=3) == []
+
+    got10 = ivf_index_topk(
+        spark, str(tmp_path / "ivf_store_default"), probe_mod=10
+    ).collect()
+    stored = [r["vec_id"] for r in fixture.select("vec_id").collect()]
+    assert {r["probe_id"] for r in got10} == {v for v in stored if v % 10 == 0}
+    assert {
+        tuple(r[c] for c in cols)
+        for r in got10
+        if r["probe_id"] % sim.PROBE_MOD == 0
+    } == wants["default"]
 
 
 def test_streaming_duplicate_clusters_match_batch(spark, tmp_path):
