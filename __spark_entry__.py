@@ -236,8 +236,6 @@ def _dataset_key(path: str) -> tuple:
 
 
 def _lsh_artifacts(spark: SparkSession, sf_dir: str) -> dict:
-    import logging
-
     path = f"{sf_dir.rstrip('/')}/documents.parquet"
     key = (spark.sparkContext.applicationId,) + _dataset_key(path)
     if key not in _LSH_CACHE:
@@ -249,13 +247,7 @@ def _lsh_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         cpairs.count()  # materialize through the already-cached sigs
         # eager-caller contract: the artifact build counts and logs any
         # hot-bucket drops once for all consumers (never a silent cap)
-        n_hot = hot.agg(F.coalesce(F.sum("bn"), F.lit(0)).alias("n")).collect()[
-            0
-        ]["n"]
-        if n_hot:
-            logging.getLogger(__name__).warning(
-                "LSH hot-bucket cap dropped %d band rows for %s", n_hot, path
-            )
+        dedup.log_hot_drops(hot)
         _LSH_CACHE[key] = {
             "cpairs": cpairs,
             "sigs": sigs,

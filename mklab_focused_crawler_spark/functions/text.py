@@ -251,9 +251,11 @@ def fingerprint_sql(expr: str) -> str:
 #
 # Whitespace is an EXPLICIT class, never `\s`: Java's \s includes
 # vertical tab, RE2's does not, and a VT adjacent to punctuation would
-# merge into one piece under RE2 but two under Java. \p{L}/\p{N} agree
-# between the engines for any codepoint in both Unicode tables (the
-# corpus is ASCII; the fuzz layer exercises BMP letters/digits/emoji).
+# merge into one piece under RE2 but two under Java. \p{L}/\p{N} differ
+# only by Unicode version: the ranges below are the codepoints DuckDB's
+# RE2 classes as \p{L} / \p{N} and Java 17's regex tables (Unicode
+# 13) leave unassigned (all of U+0000..U+10FFFF diffed; none the other
+# way round). The Spark pattern adds them, so both engines split alike.
 # --------------------------------------------------------------------------
 
 _WS = r" \t\n\x0b\f\r"
@@ -261,13 +263,50 @@ BPE_SPLIT_RE = (
     r"'s|'t|'re|'ve|'m|'ll|'d| ?\p{L}+| ?\p{N}+"
     rf"| ?[^{_WS}\p{{L}}\p{{N}}]+|[{_WS}]+"
 )
+_RE2_ONLY_L = (
+    (0x870, 0x887), (0x889, 0x88E), (0x8B5, 0x8B5), (0x8C8, 0x8C9),
+    (0xC5D, 0xC5D), (0xCDD, 0xCDD), (0x170D, 0x170D), (0x171F, 0x171F),
+    (0x1B4C, 0x1B4C), (0x2C2F, 0x2C2F), (0x2C5F, 0x2C5F), (0x9FFD, 0x9FFF),
+    (0xA7C0, 0xA7C1), (0xA7D0, 0xA7D1), (0xA7D3, 0xA7D3), (0xA7D5, 0xA7D9),
+    (0xA7F2, 0xA7F4), (0x10570, 0x1057A), (0x1057C, 0x1058A),
+    (0x1058C, 0x10592), (0x10594, 0x10595), (0x10597, 0x105A1),
+    (0x105A3, 0x105B1), (0x105B3, 0x105B9), (0x105BB, 0x105BC),
+    (0x10780, 0x10785), (0x10787, 0x107B0), (0x107B2, 0x107BA),
+    (0x10F70, 0x10F81), (0x11071, 0x11072), (0x11075, 0x11075),
+    (0x1123F, 0x11240), (0x11740, 0x11746), (0x11AB0, 0x11ABF),
+    (0x11F02, 0x11F02), (0x11F04, 0x11F10), (0x11F12, 0x11F33),
+    (0x12F90, 0x12FF0), (0x1342F, 0x1342F), (0x13441, 0x13446),
+    (0x16A70, 0x16ABE), (0x1AFF0, 0x1AFF3), (0x1AFF5, 0x1AFFB),
+    (0x1AFFD, 0x1AFFE), (0x1B11F, 0x1B122), (0x1B132, 0x1B132),
+    (0x1B155, 0x1B155), (0x1DF00, 0x1DF1E), (0x1DF25, 0x1DF2A),
+    (0x1E030, 0x1E06D), (0x1E290, 0x1E2AD), (0x1E4D0, 0x1E4EB),
+    (0x1E7E0, 0x1E7E6), (0x1E7E8, 0x1E7EB), (0x1E7ED, 0x1E7EE),
+    (0x1E7F0, 0x1E7FE), (0x2A6DE, 0x2A6DF), (0x2B735, 0x2B739),
+    (0x31350, 0x323AF),
+)
+_RE2_ONLY_N = (
+    (0x11F50, 0x11F59), (0x16AC0, 0x16AC9), (0x1D2C0, 0x1D2D3),
+    (0x1E4F0, 0x1E4F9),
+)
+
+
+def _java_class(prop: str, extra) -> str:
+    return prop + "".join(rf"\x{{{a:X}}}-\x{{{b:X}}}" for a, b in extra)
+
+
+_L_JAVA = _java_class(r"\p{L}", _RE2_ONLY_L)
+_N_JAVA = _java_class(r"\p{N}", _RE2_ONLY_N)
+_BPE_SPLIT_RE_JAVA = (
+    rf"'s|'t|'re|'ve|'m|'ll|'d| ?[{_L_JAVA}]+| ?[{_N_JAVA}]+"
+    rf"| ?[^{_WS}{_L_JAVA}{_N_JAVA}]+|[{_WS}]+"
+)
 
 
 def bpe_token_count(col: Column | str) -> Column:
     """Count of GPT-2-style pre-tokenizer pieces (whitespace runs that
     precede a word attach to it; standalone whitespace counts once)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_SPLIT_RE), F.lit(0)))
+    return F.size(F.regexp_extract_all(c, F.lit(_BPE_SPLIT_RE_JAVA), F.lit(0)))
 
 
 def bpe_token_count_sql(expr: str) -> str:

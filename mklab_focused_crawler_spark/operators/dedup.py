@@ -10,8 +10,9 @@ clustering for deterministic connected components with cluster id =
 min(doc_id) (replacing ``UUID.randomUUID``, VisualClustererBolt.java:
 127,132).
 
-Every kernel is built-in column expressions (transform / array_min /
-bit ops) with a DuckDB twin — zero Python in the hot path. The LSH
+Every kernel has a DuckDB twin. All but one are built-in column
+expressions (transform / bit ops / aggregates); the MinHash signature
+is one Arrow int64 kernel per batch (:func:`minhash_signatures`). The LSH
 self-join shuffles on (band_idx, band_key): at 100 TB that is the only
 exchange, candidate volume is O(sum of bucket sizes²) and controlled by
 the band/row trade-off, and the verify stage touches only candidate
@@ -48,7 +49,7 @@ from ..functions.text import (
 # probability). 32 bands × 4 rows gives s ≈ 0.42 ≤ 0.5; at Jaccard 0.5
 # per-pair recall is 1-(1-0.5^4)^32 ≈ 0.87 and ≥0.97 from 0.57 up —
 # production-grade for a 0.5-threshold dedup. Signature cost is linear
-# in K and rides the same explode→partial-agg plan.
+# in K: K/SIG_LANES numpy passes over each batch's shingle hashes.
 K_HASHES = 128
 BANDS = 32
 ROWS = 4
@@ -157,35 +158,9 @@ def exact_dedup_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def shingle_hashes(text_col) -> F.Column:
-    """Distinct SHINGLE_N-gram shingles → portable 60-bit hashes."""
-    sh = F.array_distinct(ngrams(tokenize(text_col), SHINGLE_N))
-    return F.transform(sh, hash64)
-
-
 def shingle_hashes_sql(expr: str) -> str:
     sh = f"list_distinct({ngrams_sql(tokenize_sql(expr), SHINGLE_N)})"
     return f"list_transform({sh}, s -> {hash64_sql('s')})"
-
-
-def _perm_fn(a: int, b: int):
-    # closure factory: PySpark introspects lambda arity, so default-arg
-    # tricks would miscount as extra parameters
-    return lambda h: (a * F.pmod(h, F.lit(MINHASH_P)) + b) % MINHASH_P
-
-
-def minhash_signature(hashes_col) -> F.Column:
-    """K_HASHES-wide signature: sig_i = min((a_i*(h mod P)+b_i) mod P).
-    Empty docs get the P sentinel in every lane."""
-    return F.array(
-        *[
-            F.coalesce(
-                F.array_min(F.transform(hashes_col, _perm_fn(COEF_A[i], COEF_B[i]))),
-                F.lit(MINHASH_P),
-            )
-            for i in range(K_HASHES)
-        ]
-    )
 
 
 def minhash_signature_sql(hashes_expr: str) -> str:
@@ -199,62 +174,88 @@ def minhash_signature_sql(hashes_expr: str) -> str:
     return "[" + ", ".join(lanes) + "]"
 
 
+# lanes per numpy pass, and shingles per pass: bounds the (lanes ×
+# shingles) int64 block at 8 MB whatever the batch's document lengths
+SIG_LANES = 16
+SIG_CHUNK = 1 << 16
+
+
+def _minhash_kernel():
+    # self-contained closure (constants and in-function imports only):
+    # cloudpickle ships it by value, so workers that cannot import this
+    # package (the stock daemon) still run it
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        a = np.asarray(COEF_A, np.int64)
+        b = np.asarray(COEF_B, np.int64)[:, None]
+        for rb in batches:
+            sh = rb.column(rb.num_columns - 1)
+            off = sh.offsets.to_numpy().astype(np.int64)
+            hp = sh.flatten().to_numpy(zero_copy_only=False) % MINHASH_P
+            off -= off[0]
+            n = rb.num_rows
+            sig = np.full((n, K_HASHES), MINHASH_P, np.int64)
+            r0 = 0
+            while r0 < n:
+                # rows [r0, r1) hold at most SIG_CHUNK shingles (or one row)
+                r1 = int(np.searchsorted(off, off[r0] + SIG_CHUNK, "right")) - 1
+                r1 = max(r0 + 1, r1)
+                lens = np.diff(off[r0 : r1 + 1])
+                rows = np.flatnonzero(lens) + r0
+                if rows.size:
+                    h = hp[off[r0] : off[r1]]
+                    starts = off[rows] - off[r0]
+                    for j in range(0, K_HASHES, SIG_LANES):
+                        m = np.multiply.outer(a[j : j + SIG_LANES], h)
+                        m += b[j : j + SIG_LANES]
+                        m %= MINHASH_P
+                        sig[rows, j : j + SIG_LANES] = np.minimum.reduceat(
+                            m, starts, axis=1
+                        ).T
+                r0 = r1
+            lanes = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * K_HASHES, K_HASHES, dtype=np.int32)),
+                pa.array(sig.ravel()),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns, lanes], names=[*rb.schema.names, "sig"]
+            )
+
+    return kernel
+
+
 def minhash_signatures(corpus: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, [carry...,] shingles, sig) via explode → hash once →
-    K min-aggs.
+    """(doc_id, [carry...,] shingles, sig): one row per non-NULL-text
+    row of ``corpus``. ``shingles`` is the sorted distinct
+    SHINGLE_N-gram hash array (the DuckDB twin's
+    ``shingle_hashes_sql``); ``sig`` the K_HASHES lanes sig_i =
+    min((a_i*(h mod P)+b_i) mod P) over it (``minhash_signature_sql``),
+    all P for an empty array (fewer than SHINGLE_N tokens). NULL texts
+    get no row. ``carry`` names columns of ``corpus`` passed through.
 
-    The naive column form (minhash_signature over a shingle-hash
-    column) lets Catalyst's projection collapse inline the md5 chain
-    into every signature lane — K× the hash work. Exploding first
-    materializes each shingle hash exactly once, then the K permuted
-    minima are one partial-aggregated groupBy (map-side combined, one
-    shuffle on doc_id) — measured 5-10× faster and the right plan at
-    100 TB.
+    Two steps: one projection hashes each distinct shingle once, then
+    one Arrow kernel computes every lane in int64 numpy — SIG_LANES
+    lanes per pass over a batch's flat hash array, then
+    ``np.minimum.reduceat`` over the list offsets. Exact:
+    a_i*(h mod P) < 2^21 * 2^31 = 2^52. No per-row Python, no
+    aggregate, no shuffle."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    ``carry`` names doc-constant columns of ``corpus`` to pass through
-    the aggregation (as ``first()``) — lets callers avoid a post-agg
-    join whose build side would re-evaluate its producing subtree
-    (column-pruned copies don't hit ReusedExchange).
-
-    Docs with < SHINGLE_N tokens have no shingles and get the P
-    sentinel in every lane. They're found by a narrow filter on the
-    corpus — NOT a left-anti join against the aggregate, which would
-    re-run the whole explode→hash→agg subtree a second time (the
-    pruned-schema copy is not exchange-reusable)."""
-    base = ["doc_id", *carry]
-    hh = corpus.select(
-        *base,
-        F.explode(
-            F.array_distinct(ngrams(tokenize(F.col("text")), SHINGLE_N))
-        ).alias("shingle"),
-    ).select(*base, hash64(F.col("shingle")).alias("h")).withColumn(
-        # hoist h mod P: evaluated once per shingle row instead of once
-        # per lane (K× the pmods otherwise — Catalyst doesn't CSE
-        # across aggregate expressions)
-        "hp",
-        F.pmod(F.col("h"), F.lit(MINHASH_P)),
+    shingles = F.sort_array(
+        F.array_distinct(
+            F.transform(
+                F.array_distinct(ngrams(tokenize(F.col("text")), SHINGLE_N)), hash64
+            )
+        )
     )
-    aggs = (
-        [
-            F.min((COEF_A[i] * F.col("hp") + COEF_B[i]) % MINHASH_P).alias(f"s{i}")
-            for i in range(K_HASHES)
-        ]
-        + [F.array_sort(F.collect_set("h")).alias("shingles")]
-        + [F.first(c).alias(c) for c in carry]
+    src = corpus.filter(F.col("text").isNotNull()).select(
+        "doc_id", *carry, shingles.alias("shingles")
     )
-    sigs = hh.groupBy("doc_id").agg(*aggs)
-    sig_arr = F.array(*[F.col(f"s{i}") for i in range(K_HASHES)])
-    out = sigs.select("doc_id", *carry, "shingles", sig_arr.alias("sig"))
-    # size() is -1 on NULL arrays (null text) — <= 0 catches both
-    empties = corpus.filter(
-        F.size(F.array_distinct(ngrams(tokenize(F.col("text")), SHINGLE_N))) <= 0
-    ).select(
-        "doc_id",
-        *carry,
-        F.array().cast("array<bigint>").alias("shingles"),
-        F.array(*[F.lit(MINHASH_P).cast("long")] * K_HASHES).alias("sig"),
-    )
-    return out.unionByName(empties)
+    # a copy: StructType.add would mutate src's cached schema
+    schema = StructType([*src.schema.fields, StructField("sig", ArrayType(LongType()))])
+    return src.mapInArrow(_minhash_kernel(), schema)
 
 
 def lsh_pairs(corpus: DataFrame) -> DataFrame:
@@ -371,16 +372,24 @@ def expand_canonical_pairs(cpairs: DataFrame, sigs: DataFrame) -> DataFrame:
     have the canonical's exact shingle set); intra-group pairs are
     jaccard 1.0 by construction, emitted only for non-empty shingle
     sets (the naive pipeline scores empty-vs-empty 0.0)."""
+    verified = cpairs.join(
+        sigs.select(F.col("doc_id").alias("ca"), F.col("members").alias("mem_a")),
+        "ca",
+    ).join(
+        sigs.select(F.col("doc_id").alias("cb"), F.col("members").alias("mem_b")),
+        "cb",
+    )
+    return expand_members(verified, sigs)
+
+
+def expand_members(verified: DataFrame, sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) document pairs from canonical pairs
+    carrying both sides' members (``verified``: mem_a, mem_b, jaccard)
+    plus the intra-group 1.0 pairs of ``sigs``' members — the expansion
+    shared by :func:`expand_canonical_pairs` and the streaming LSH
+    micro-batch."""
     cross = (
-        cpairs.join(
-            sigs.select(F.col("doc_id").alias("ca"), F.col("members").alias("mem_a")),
-            "ca",
-        )
-        .join(
-            sigs.select(F.col("doc_id").alias("cb"), F.col("members").alias("mem_b")),
-            "cb",
-        )
-        .select(F.explode("mem_a").alias("ma"), "mem_b", "jaccard")
+        verified.select(F.explode("mem_a").alias("ma"), "mem_b", "jaccard")
         .select("ma", F.explode("mem_b").alias("mb"), "jaccard")
         .select(
             F.least("ma", "mb").alias("doc_a"),
@@ -398,12 +407,26 @@ def expand_canonical_pairs(cpairs: DataFrame, sigs: DataFrame) -> DataFrame:
     return cross.unionByName(intra)
 
 
-def _lsh_pipeline(corpus: DataFrame, bucket_cap: int):
-    # 1. exact pre-collapse (one hash-groupBy pass over the corpus).
-    # The doc→canonical mapping is folded INTO the persisted signature
-    # table as a members array: the expansion stage needs it several
-    # times, and a free-standing mapping frame would re-run the md5
-    # groupBy at every reference (measured 3× the query's cost).
+def canonical_signatures(corpus: DataFrame) -> tuple[DataFrame, int]:
+    """(sigs, n): the persisted, already materialized signature table of
+    ``corpus``'s exact-duplicate canonicals — (doc_id=canonical,
+    members, shingles, sig), ``members`` the sorted doc_ids sharing the
+    canonical's normalized text (md5 of ascii_lower(trim(text)), the
+    normalization of :func:`exact_dedup`) — and its row count. The one
+    build of batch :func:`lsh_pairs_with_sigs` and the streaming LSH
+    micro-batch; the caller owns ``sigs.unpersist()``.
+
+    The doc→canonical mapping rides the signature table as ``members``
+    (a carry column of :func:`minhash_signatures`): the expansion stage
+    needs it several times, and a free-standing mapping frame would
+    re-run the md5 groupBy at every reference (measured 3× the query's
+    cost).
+
+    The count runs NOW: the banded self-join, the hot-bucket broadcast
+    and the verify/expansion rejoins read this table from ~6 places, and
+    several of those stages launch concurrently inside the downstream
+    action — each racing stage that finds the cache cold recomputes the
+    md5+signature subtree (measured 47s → 12s at sf0.1 by eagerizing)."""
     hashed = corpus.select(
         "doc_id", F.md5(ascii_lower(F.trim(F.col("text")))).alias("text_hash")
     )
@@ -411,21 +434,14 @@ def _lsh_pipeline(corpus: DataFrame, bucket_cap: int):
         F.min("doc_id").alias("doc_id"),
         F.sort_array(F.collect_list("doc_id")).alias("members"),
     )
-    # members ride the signature aggregation (doc-constant, carried as
-    # first()) so `groups` — a full-corpus md5 groupBy — is evaluated
-    # once: a separate post-agg members join would put a second,
-    # column-pruned (thus non-exchange-reusable) copy of that subtree
-    # in the plan.
-    canon_corpus = corpus.join(groups.select("doc_id", "members"), "doc_id")
-    sigs = minhash_signatures(canon_corpus, carry=("members",)).persist()
-    # Materialize the cache NOW: the banded self-join, the hot-bucket
-    # broadcast and the verify/expansion rejoins reference this subtree
-    # from ~6 places, and several of those stages launch concurrently
-    # inside the downstream action — each racing stage that finds the
-    # cache cold recomputes the md5+K-permutation subtree from scratch
-    # (measured 47s → 12s at sf0.1 by eagerizing). One count() job up
-    # front populates the cache once; every later stage is a cache read.
-    sigs.count()
+    canon = corpus.join(groups.select("doc_id", "members"), "doc_id")
+    sigs = minhash_signatures(canon, carry=("members",)).persist()
+    return sigs, sigs.count()
+
+
+def _lsh_pipeline(corpus: DataFrame, bucket_cap: int):
+    # 1. exact pre-collapse + signatures (one persisted, counted table)
+    sigs, _ = canonical_signatures(corpus)
 
     # 2. banding over non-empty canonicals, hot buckets dropped + counted.
     bands = band_rows(sigs)
@@ -457,19 +473,22 @@ def _lsh_pipeline(corpus: DataFrame, bucket_cap: int):
         sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
         "doc_b",
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    cpairs = (
-        cand.withColumn(
-            "jaccard",
-            F.round(
-                F.when(union > 0, inter.cast("double") / union).otherwise(0.0), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select(F.col("doc_a").alias("ca"), F.col("doc_b").alias("cb"), "jaccard")
+    cpairs = verify_jaccard(cand).select(
+        F.col("doc_a").alias("ca"), F.col("doc_b").alias("cb"), "jaccard"
     )
     return cpairs, sigs, hot
+
+
+def verify_jaccard(cand: DataFrame) -> DataFrame:
+    """``cand`` + the exact Jaccard of its shingle arrays (sh_a, sh_b),
+    rounded to 6 dp (0.0 when both are empty), kept at ≥
+    JACCARD_THRESHOLD — the verify gate of batch and streaming LSH."""
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
+    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
+    return cand.withColumn("jaccard", F.round(jac, 6)).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
+    )
 
 
 def lsh_pairs_sql(corpus_src: str | None = None) -> str:
@@ -641,31 +660,6 @@ def jaccard_topk_sql(k: int = JACCARD_TOPK) -> str:
 # ---------------------------------------------------------------------------
 
 
-def simhash(text_col) -> F.Column:
-    """60-bit SimHash over the token multiset: bit b set iff
-    sum_tokens(bit_b(h(token)) ? +1 : -1) > 0. 60 bits (not the round-1
-    32): at 10^10 docs the banded self-join's candidate volume is
-    O(n^2 / band_value_space); 15-bit bands give 32768 bucket values per
-    band vs 256 for 8-bit bands — a 128x candidate reduction."""
-    hh = F.transform(tokenize(text_col), hash64)
-
-    def vote_fn(bb: int):
-        # shiftright, not floor(h/2^b): double division loses exactness
-        # above 2^53 and 60-bit hashes exceed it
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, bb) % 2 == 1, 1
-        ).otherwise(-1)
-
-    bits = []
-    for b in range(SIMHASH_BITS):
-        vote = F.aggregate(hh, F.lit(0), vote_fn(b))
-        bits.append(F.when(vote > 0, F.lit(2**b)).otherwise(F.lit(0)))
-    total = bits[0]
-    for x in bits[1:]:
-        total = total + x
-    return total.cast("long")
-
-
 def simhash_sql(expr: str) -> str:
     hh = f"list_transform({tokenize_sql(expr)}, t -> {hash64_sql('t')})"
     parts = []
@@ -679,9 +673,18 @@ def simhash_sql(expr: str) -> str:
 
 
 def simhash_table(corpus: DataFrame) -> DataFrame:
-    """(doc_id, sh) via explode → hash once → 32 bit-vote aggs (same
-    plan rationale as minhash_signatures: the pure-column simhash()
-    form makes Catalyst recompute the token md5 for every bit)."""
+    """(doc_id, sh) via explode → hash once → SIMHASH_BITS bit-vote
+    aggs: sh bit b is set iff sum_tokens(bit_b(h(token)) ? +1 : -1) > 0
+    (``simhash_sql``). 60 bits, not 32: at 10^10 docs the banded
+    self-join's candidate volume is O(n^2 / band_value_space), and 15-bit
+    bands give 32768 bucket values per band vs 256 for 8-bit bands.
+    Hashing each token once in an exploded column matters: a per-bit
+    column expression over the token array makes Catalyst recompute the
+    token md5 for every bit. Whether an Arrow kernel (the MinHash
+    kernel's shape) should replace the aggregate plan is open: two
+    prototype measurements disagree (PLANS.md "MinHash signatures: one
+    kernel"). Token-less texts ("", punctuation only) get sh = 0; NULL texts get
+    no row."""
     hh = corpus.select(
         "doc_id", F.explode(tokenize(F.col("text"))).alias("tok")
     ).select("doc_id", hash64(F.col("tok")).alias("h"))
@@ -704,8 +707,11 @@ def simhash_table(corpus: DataFrame) -> DataFrame:
     )
     # token-less docs via a narrow corpus filter — a left-anti join
     # against `sh` would re-run the explode→hash→vote subtree (the
-    # pruned copy isn't exchange-reusable); size() is -1 on NULL
-    empties = corpus.filter(F.size(tokenize(F.col("text"))) <= 0).select(
+    # pruned copy isn't exchange-reusable). NULL text gets no row, as
+    # in the explode (explicit: size(NULL) is -1 with ANSI mode off)
+    empties = corpus.filter(
+        F.col("text").isNotNull() & (F.size(tokenize(F.col("text"))) <= 0)
+    ).select(
         "doc_id", F.lit(0).cast("long").alias("sh")
     )
     return sh.unionByName(empties)
@@ -781,6 +787,36 @@ def simhash_pairs_sql() -> str:
 # ---------------------------------------------------------------------------
 # connected-component duplicate clusters (iterative; deterministic ids)
 # ---------------------------------------------------------------------------
+
+
+def log_hot_drops(hot: DataFrame) -> int:
+    """Count the band rows the hot-bucket cap dropped (``hot`` is the
+    (band_idx, band_key, bn) frame of the LSH pipeline), log one WARNING
+    when there are any, and return the count. No silent caps: the
+    near-dup pairs (and clusters) of a corpus with drops are explicitly
+    partial. Eager callers run it once per corpus, not once per
+    consumer."""
+    r = hot.agg(
+        F.coalesce(F.sum("bn"), F.lit(0)).alias("n"), F.count(F.lit(1)).alias("k")
+    ).collect()[0]
+    if r["n"]:
+        _LOG.warning(
+            "LSH hot-bucket cap dropped %d band rows in %d buckets; "
+            "near-duplicate recall is reduced on this corpus",
+            r["n"],
+            r["k"],
+        )
+    return r["n"]
+
+
+# Clustering regime switch: up to this many edges the component graph
+# is collected to the driver and labelled by union_find_labels; above it
+# min_label_propagation runs on the executors (batch
+# clusters_from_canonical, and the streaming clusters op's default
+# driver_edge_limit). The driver path is still the faster one at 10^6
+# edges (PLANS.md "MinHash signatures: one kernel"); the limit bounds
+# the driver's collected graph, not a measured speed crossover.
+DRIVER_EDGE_LIMIT = 1_000_000
 
 
 def union_find_labels(edges) -> list[tuple[int, int]]:
@@ -865,30 +901,18 @@ def clusters_from_canonical(
         ["a", "b"]
     ).persist()
 
-    # Scale-adaptive: below ~1M edges the component graph fits on the
-    # driver and a union-find beats O(diameter) Spark rounds by 10-50×
-    # (each distributed round costs fixed shuffle latency). Above it,
-    # the iterative min-label join path runs — same deterministic
-    # output, no driver materialization. Mirrors Catalyst's own
-    # broadcast-vs-shuffle join choice.
+    # Scale-adaptive: up to DRIVER_EDGE_LIMIT edges the component graph
+    # is collected and labelled by a driver union-find (measured 5.7× to
+    # 2.7× faster than min_label_propagation from 10^4 to 10^6 edges on
+    # a 4-CPU local master: each distributed round costs fixed shuffle
+    # latency). Above it, the iterative min-label join path runs — same
+    # deterministic output, no driver materialization.
     n_edges = edges.count()  # materializes the edge cache...
-    n_hot = 0
     if log_hot:
-        n_hot = (
-            hot.agg(F.coalesce(F.sum("bn"), F.lit(0)).alias("n")).collect()[0]["n"]
-        )
+        log_hot_drops(hot)  # before the release: `hot` reads the sigs
     if release_sigs:
         sigs.unpersist()  # the LSH signature table can go now
-    if n_hot:
-        # no silent caps: the hot-bucket guard dropped band rows, so the
-        # near-dup edge set (and these clusters) is explicitly partial
-        _LOG.warning(
-            "LSH hot-bucket cap dropped %d band rows (bucket_cap=%d); "
-            "near-duplicate recall is reduced on this corpus",
-            n_hot,
-            LSH_BUCKET_CAP,
-        )
-    if n_edges <= 1_000_000:
+    if n_edges <= DRIVER_EDGE_LIMIT:
         rows = union_find_labels(
             (row["a"], row["b"]) for row in edges.collect()
         )

@@ -175,26 +175,14 @@ def merge_bloom_driver(table: dict, rows) -> None:
     ``rows`` is a pyarrow Table with (bucket, url_hash) columns — the
     whole batch stays columnar on the driver (a Row list spent more
     per-iteration serial time building Python objects than the merge
-    itself) — or a Row list (tests/small paths)."""
-    if rows is None:
-        return
-    if hasattr(rows, "column_names"):  # pyarrow.Table: zero-copy columns
-        if rows.num_rows == 0:
-            return
-        bks = rows["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
-        khs = (
-            rows["url_hash"]
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-            .astype(np.uint64)
-        )
-    else:
-        if not rows:
-            return
-        bks = np.array([int(r["bucket"]) for r in rows], dtype=np.int64)
-        khs = np.array([int(r["url_hash"]) for r in rows], dtype=np.int64).astype(
-            np.uint64
-        )
+    itself)."""
+    bks = rows["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
+    khs = (
+        rows["url_hash"]
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+        .astype(np.uint64)
+    )
     order = np.argsort(bks, kind="stable")
     bks, khs = bks[order], khs[order]
     uniq, starts = np.unique(bks, return_index=True)

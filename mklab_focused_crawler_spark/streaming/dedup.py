@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.text import ascii_lower
+from ..operators.dedup import DRIVER_EDGE_LIMIT
 
 OUTPUT_SCHEMA = "doc_id long, text_hash string, canonical_doc_id long, dup_count long"
 STATE_SCHEMA = "members array<bigint>"
@@ -346,21 +347,20 @@ def _lsh_process_batch(
     """One micro-batch of the incremental LSH pipeline (see
     run_streaming_lsh_dedup for the architecture).
 
-    Exact duplicates are pre-collapsed WITHIN the batch (same min-id
-    canonical + members design as the batch pipeline): only batch
-    canonicals are signed, banded and indexed, and verified canonical
-    pairs expand through BOTH sides' members arrays (the shingle store
-    carries members per indexed canonical). A 10k-copy boilerplate
-    flood inside one batch therefore costs O(g) band rows, not g² pairs
-    through one bucket — without this the batch-side flood defense
-    (`_lsh_pipeline` step 1) would be silently absent from the
-    streaming twin and the cap would fire at group size instead of
-    flood-of-distinct-texts size. The same content arriving across B
-    separate batches still occupies B index entries (each batch's
-    canonical); their identical signatures collide on every band, so
-    the cross-batch 1.0 pairs and all inherited near-pairs are emitted,
-    and occupancy grows with B (bounded by batch count, not group
-    size).
+    Exact duplicates are pre-collapsed WITHIN the batch by the batch
+    pipeline's own build (``operators/dedup.canonical_signatures``):
+    only batch canonicals are signed, banded and indexed, and verified
+    canonical pairs expand through BOTH sides' members arrays (the
+    shingle store carries members per indexed canonical). A 10k-copy
+    boilerplate flood inside one batch therefore costs O(g) band rows,
+    not g² pairs through one bucket — without this the batch-side flood
+    defense would be silently absent from the streaming twin and the
+    cap would fire at group size instead of flood-of-distinct-texts
+    size. The same content arriving across B separate batches still
+    occupies B index entries (each batch's canonical); their identical
+    signatures collide on every band, so the cross-batch 1.0 pairs and
+    all inherited near-pairs are emitted, and occupancy grows with B
+    (bounded by batch count, not group size).
 
     Index IO is partition-pruned: the band probe, the occupancy count
     and the shingle verify read ONLY the partitions (band-key buckets /
@@ -378,12 +378,12 @@ def _lsh_process_batch(
     and ``new_pairs`` (the batch's verified pairs as driver rows, only
     when ``collect_pairs`` — the streaming clusters op folds exactly
     these into its incremental union-find)."""
-    from ..functions.text import ascii_lower as _ascii_lower
     from ..operators.dedup import (
-        JACCARD_THRESHOLD,
         LSH_BUCKET_CAP,
         band_rows,
-        minhash_signatures,
+        canonical_signatures,
+        expand_members,
+        verify_jaccard,
     )
 
     cap = LSH_BUCKET_CAP if bucket_cap is None else bucket_cap
@@ -400,17 +400,9 @@ def _lsh_process_batch(
     corpus = batch_df.filter(F.col("text").isNotNull()).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
-    # within-batch exact pre-collapse (batch-pipeline parity)
-    hashed = corpus.select(
-        "doc_id", F.md5(_ascii_lower(F.trim(F.col("text")))).alias("text_hash")
-    )
-    groups = hashed.groupBy("text_hash").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.sort_array(F.collect_list("doc_id")).alias("members"),
-    )
-    canon = corpus.join(groups.select("doc_id", "members"), "doc_id")
-    sigs = minhash_signatures(canon, carry=("members",)).persist()
-    if sigs.count() == 0:
+    # within-batch exact pre-collapse (the batch pipeline's build)
+    sigs, n_sigs = canonical_signatures(corpus)
+    if n_sigs == 0:
         sigs.unpersist()
         return stats
     raw_bands = band_rows(sigs).persist()
@@ -528,7 +520,7 @@ def _lsh_process_batch(
         all_sh = new_sh
     else:
         all_sh = old_sh.unionByName(new_sh)
-    verified = (
+    verified = verify_jaccard(
         cand.join(
             all_sh.select(
                 F.col("doc_id").alias("doc_a"),
@@ -536,8 +528,7 @@ def _lsh_process_batch(
                 F.col("members").alias("mem_a"),
             ),
             "doc_a",
-        )
-        .join(
+        ).join(
             all_sh.select(
                 F.col("doc_id").alias("doc_b"),
                 F.col("shingles").alias("sh_b"),
@@ -545,37 +536,12 @@ def _lsh_process_batch(
             ),
             "doc_b",
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("mem_a", "mem_b", "jaccard")
-    )
-    # expand canonical pairs through both sides' members (batch-pipeline
-    # expansion), plus this batch's intra-group 1.0 pairs; cross-batch
-    # intra pairs come from the canonical-vs-canonical 1.0 collision
-    cross = (
-        verified.select(F.explode("mem_a").alias("ma"), "mem_b", "jaccard")
-        .select("ma", F.explode("mem_b").alias("mb"), "jaccard")
-        .select(
-            F.least("ma", "mb").alias("doc_a"),
-            F.greatest("ma", "mb").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    intra = (
-        sigs.filter((F.size("shingles") > 0) & (F.size("members") > 1))
-        .select(F.explode("members").alias("doc_a"), "members")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
-    )
-    got = cross.unionByName(intra).persist()
+    ).select("mem_a", "mem_b", "jaccard")
+    # expand canonical pairs through both sides' members (the batch
+    # pipeline's expansion), plus this batch's intra-group 1.0 pairs;
+    # cross-batch intra pairs come from the canonical-vs-canonical 1.0
+    # collision
+    got = expand_members(verified, sigs).persist()
     # per-table batch tags make every commit idempotent: a foreachBatch
     # replay (crash before the checkpoint offset commit) re-runs this
     # function, and un-tagged re-appends would double the index rows —
@@ -701,7 +667,7 @@ def run_streaming_duplicate_clusters(
     checkpoint_dir: str,
     bucket_cap: int | None = None,
     compact_every: int | None = None,
-    driver_edge_limit: int = 1_000_000,
+    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
     stats_out: list | None = None,
     key_buckets: int | None = None,
 ) -> dict:

@@ -218,30 +218,38 @@ def test_bloom_positions_no_false_negatives_property(hashes):
     assert hit.all()  # every inserted key must test positive
 
 
-def test_merge_bloom_driver_arrow_matches_rows():
-    """The Arrow fast path of the driver-side bloom merge must produce
-    bit-identical filters to the Row-list path, both on fresh buckets
-    and when merging into existing ones."""
+def test_merge_bloom_driver_matches_build_one():
+    """The driver-side bloom merge over an Arrow key batch: merged into
+    an empty table, each bucket's filter equals an independent
+    ``_build_one`` of that bucket's keys; merging the same keys again
+    sets no new bit. Keys span the whole int64 range, negative values
+    included, as real xxhash64 url hashes do."""
     import numpy as np
     import pyarrow as pa
 
-    from mklab_focused_crawler_spark.operators.seen import merge_bloom_driver
+    from mklab_focused_crawler_spark.operators.seen import (
+        _build_one,
+        merge_bloom_driver,
+    )
 
     rng = np.random.default_rng(7)
-    keys = rng.integers(0, 2**59, 5000)
+    keys = rng.integers(-(2**63), 2**63 - 1, 5000, dtype=np.int64)
     bks = rng.integers(0, 8, 5000)
-    rows = [{"bucket": int(b), "url_hash": int(k)} for b, k in zip(bks, keys)]
+    assert (keys < 0).any() and (keys > 0).any()
     tbl = pa.table(
         {"bucket": pa.array(bks, pa.int32()), "url_hash": pa.array(keys, pa.int64())}
     )
-    t_rows, t_arrow = {}, {}
-    for _ in range(2):  # second pass merges into existing filters
-        merge_bloom_driver(t_rows, rows)
-        merge_bloom_driver(t_arrow, tbl)
-        assert t_rows.keys() == t_arrow.keys()
-        for bk in t_rows:
-            assert t_rows[bk][0] == t_arrow[bk][0]
-            assert np.array_equal(t_rows[bk][1], t_arrow[bk][1])
+    table = {}
+    merge_bloom_driver(table, tbl)
+    assert sorted(table) == sorted(set(bks.tolist()))
+    for bk, (nbits, arr) in table.items():
+        want_nbits, want_bits = _build_one(keys[bks == bk])
+        assert nbits == want_nbits
+        assert arr.tobytes() == want_bits
+    before = {bk: arr.copy() for bk, (_, arr) in table.items()}
+    merge_bloom_driver(table, tbl)
+    for bk, (_, arr) in table.items():
+        assert np.array_equal(arr, before[bk])
 
 
 # --------------------------- extraction ------------------------------

@@ -59,6 +59,11 @@ def test_duckdb_dialect_agrees(spark):
         "ı I µ Μ",
         "\x0b x \x0b",
         "tab\tand\nnewline",
+        # letters/digits newer than Java 17's Unicode 13 tables
+        "0\U0001e4f0",
+        "\U00031350\U000323af x",
+        "\u0870\u0887!\U00011f50",
+        "a\U0001e4d0 9\U0001d2c0.",
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i long, t string"
