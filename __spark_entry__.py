@@ -38,7 +38,7 @@ from mklab_focused_crawler_spark.operators import (
 )
 from mklab_focused_crawler_spark.functions import scoring, text, urls
 from mklab_focused_crawler_spark.functions.text import STOPWORDS
-from mklab_focused_crawler_spark.sources.tables import load_table
+from mklab_focused_crawler_spark.sources.tables import dataset_key, load_table
 
 from pyspark.sql import functions as F
 
@@ -213,31 +213,9 @@ def clear_lsh_cache() -> None:
     _LSH_CACHE.clear()
 
 
-def _dataset_key(path: str) -> tuple:
-    """File-identity cache key for a parquet dataset. Single files key on
-    (path, mtime_ns, size); Spark-written DIRECTORIES additionally fold
-    in every contained data file's (name, size, mtime_ns) — a rewrite
-    that replaces part files in place changes the key even when the
-    directory's own stat doesn't (same entry count leaves dir mtime
-    unchanged on some filesystems)."""
-    import os
-
-    st = os.stat(path)
-    key: tuple = (path, st.st_mtime_ns, st.st_size)
-    if os.path.isdir(path):
-        parts = []
-        for name in sorted(os.listdir(path)):
-            if name.startswith((".", "_")):
-                continue  # _SUCCESS / .crc markers don't carry data
-            ps = os.stat(os.path.join(path, name))
-            parts.append((name, ps.st_size, ps.st_mtime_ns))
-        key = key + (tuple(parts),)
-    return key
-
-
 def _lsh_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     path = f"{sf_dir.rstrip('/')}/documents.parquet"
-    key = (spark.sparkContext.applicationId,) + _dataset_key(path)
+    key = (spark.sparkContext.applicationId,) + dataset_key(path)
     if key not in _LSH_CACHE:
         while len(_LSH_CACHE) >= 2:
             _release_lsh_entry(_LSH_CACHE.pop(next(iter(_LSH_CACHE))))
@@ -342,7 +320,7 @@ def _q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = f"{sf_dir.rstrip('/')}/documents.parquet"
-    key = (spark.sparkContext.applicationId,) + _dataset_key(path)
+    key = (spark.sparkContext.applicationId,) + dataset_key(path)
     if key not in _PIPELINE_CACHE:
         while len(_PIPELINE_CACHE) >= 2:
             k = next(iter(_PIPELINE_CACHE))
@@ -378,13 +356,13 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # once and serves many queries, so consumers (ivf_topk_trained,
 # semantic_dedup — bench runs each query multiple passes) share one
 # training per corpus. Cache key = the parquet dataset's identity
-# (_dataset_key), so a rewritten corpus retrains.
+# (dataset_key), so a rewritten corpus retrains.
 _CODEBOOK_CACHE: dict[tuple, list[list[int]]] = {}
 
 
 def _trained_codebook(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     path = f"{sf_dir.rstrip('/')}/embeddings.parquet"
-    key = _dataset_key(path)
+    key = dataset_key(path)
     if key not in _CODEBOOK_CACHE:
         _CODEBOOK_CACHE[key] = similarity.train_ivf_codebook_df(
             load_table(spark, sf_dir, "embeddings")
@@ -397,7 +375,7 @@ _PQ_BOOKS_CACHE: dict[tuple, list] = {}
 
 def _trained_pq_books(spark: SparkSession, sf_dir: str) -> list:
     path = f"{sf_dir.rstrip('/')}/embeddings.parquet"
-    key = _dataset_key(path)
+    key = dataset_key(path)
     if key not in _PQ_BOOKS_CACHE:
         _PQ_BOOKS_CACHE[key] = similarity.train_pq_codebooks_df(
             load_table(spark, sf_dir, "embeddings")

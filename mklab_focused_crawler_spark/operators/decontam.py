@@ -43,10 +43,11 @@ EVAL_MOD = 10
 
 def _gram_hashes(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, gh): one row per token n-gram, hashed portably."""
-    return docs.select(
-        "doc_id",
-        F.explode(ngrams(tokenize(F.col("text")), n)).alias("gram"),
-    ).select("doc_id", hash64(F.col("gram")).alias("gh"))
+    return (
+        docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
+        .select("doc_id", F.explode(ngrams(F.col("toks"), n)).alias("gram"))
+        .select("doc_id", hash64(F.col("gram")).alias("gh"))
+    )
 
 
 def decontaminate(

@@ -245,13 +245,15 @@ def minhash_signatures(corpus: DataFrame, carry: tuple[str, ...] = ()) -> DataFr
 
     shingles = F.sort_array(
         F.array_distinct(
-            F.transform(
-                F.array_distinct(ngrams(tokenize(F.col("text")), SHINGLE_N)), hash64
-            )
+            F.transform(F.array_distinct(ngrams(F.col("toks"), SHINGLE_N)), hash64)
         )
     )
-    src = corpus.filter(F.col("text").isNotNull()).select(
-        "doc_id", *carry, shingles.alias("shingles")
+    # tokens as an attribute first: ngrams reads its input several times,
+    # and a tokenize Column would be inlined at every read
+    src = (
+        corpus.filter(F.col("text").isNotNull())
+        .select("doc_id", *carry, tokenize(F.col("text")).alias("toks"))
+        .select("doc_id", *carry, shingles.alias("shingles"))
     )
     # a copy: StructType.add would mutate src's cached schema
     schema = StructType([*src.schema.fields, StructField("sig", ArrayType(LongType()))])
@@ -555,12 +557,16 @@ def jaccard_topk(corpus: DataFrame, k: int = JACCARD_TOPK) -> DataFrame:
     Ranking on the double a/b is cross-engine safe: IEEE division of
     identical integers is correctly rounded everywhere (unlike log/exp).
     """
-    sh = corpus.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(ngrams(tokenize(F.col("text")), SHINGLE_N))
-        ).alias("shingle"),
-    ).select("doc_id", hash64(F.col("shingle")).alias("h"))
+    sh = (
+        corpus.select("doc_id", tokenize(F.col("text")).alias("toks"))
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(ngrams(F.col("toks"), SHINGLE_N))).alias(
+                "shingle"
+            ),
+        )
+        .select("doc_id", hash64(F.col("shingle")).alias("h"))
+    )
     # corpus size as a broadcast 1-row join, not an eager .count() —
     # keeps the whole query one job. floor() (not int-cast/round) so the
     # cap truncates identically in Spark, Python and DuckDB.

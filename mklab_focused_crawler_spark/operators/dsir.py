@@ -60,9 +60,8 @@ def _bucket_occurrences(docs: DataFrame) -> DataFrame:
     """(doc_id, b): one row per bigram occurrence, bucketed. The hash
     runs AFTER the explode (projection-collapse convention: one md5 per
     occurrence, never re-inlined per consumer)."""
-    grams = docs.select(
-        "doc_id",
-        F.explode(ngrams(tokenize(F.col("text")), 2)).alias("gram"),
+    grams = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).select(
+        "doc_id", F.explode(ngrams(F.col("toks"), 2)).alias("gram")
     )
     return grams.select(
         "doc_id", F.pmod(hash64(F.col("gram")), F.lit(N_BUCKETS)).alias("b")

@@ -19,11 +19,12 @@ explode/join plumbing — is real and tested; swapping in PIL/ffmpeg on a
 real cluster changes only the marked inner functions.
 
 Scale: media payloads dominate row size, so the decode stage is a
-narrow ``mapInPandas`` over a payload-pruned projection (never carry
-``payload`` through a shuffle); results re-join the metadata by
-``media_ref``. ``spark.sql.files.maxPartitionBytes`` bounds Arrow batch
-memory; at 100 TB the payload column lives in its own parquet column
-chunks and column pruning keeps text-only queries from ever reading it.
+narrow ``mapInPandas`` (never carry ``payload`` through a shuffle)
+that carries the row's other columns through, so nothing joins back
+to recover them. ``spark.sql.files.maxPartitionBytes`` bounds Arrow
+batch memory; at 100 TB the payload column lives in its own parquet
+column chunks and column pruning keeps text-only queries from ever
+reading it.
 """
 
 from __future__ import annotations
@@ -35,14 +36,25 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
+from ..functions.exprcache import session_expr
 from ..functions.hashing import hash64
 
 FEATURE_DIM = 16
-DECODED_SCHEMA = (
-    "media_ref string, media_type string, width int, height int, "
-    "n_frames int, feature array<double>"
-)
+# what the codec adds to a media row (which loses its payload)
+DECODED_FIELDS = [
+    StructField("width", IntegerType()),
+    StructField("height", IntegerType()),
+    StructField("n_frames", IntegerType()),
+    StructField("feature", ArrayType(DoubleType())),
+]
 
 
 def media_table_from_spans(spans_df: DataFrame) -> DataFrame:
@@ -52,7 +64,9 @@ def media_table_from_spans(spans_df: DataFrame) -> DataFrame:
     blob standing in for fetched image bytes (MediaFetcherBolt's
     ``(MediaItem, bytes)`` emission)."""
     media = (
-        spans_df.select("doc_id", F.explode("spans").alias("s"))
+        # explode_outer: see spans.explode_spans (the kind test drops the
+        # null row it emits for a span-less doc)
+        spans_df.select("doc_id", F.explode_outer("spans").alias("s"))
         .filter(F.col("s.kind") == "media")
         .select(
             "doc_id",
@@ -60,13 +74,19 @@ def media_table_from_spans(spans_df: DataFrame) -> DataFrame:
             F.col("s.offset").alias("offset"),
         )
     )
+    payload, mtype = session_expr("media_table_from_spans", _media_trees)
+    return media.withColumn("payload", payload).withColumn("media_type", mtype)
+
+
+def _media_trees() -> tuple:
+    """(payload, media_type) of a media row, from ``media_ref``."""
     # 16-byte md5 digest repeated 4x = 64-byte payload. concat, not
     # repeat(): repeat coerces binary→string and non-UTF8 bytes break
     # the Arrow transfer into the decode UDF.
     digest = F.unhex(F.md5(F.col("media_ref")))
     payload = F.concat(digest, digest, digest, digest)
     mtype = F.when(hash64(F.col("media_ref")) % 4 == 0, "video").otherwise("image")
-    return media.withColumn("payload", payload).withColumn("media_type", mtype)
+    return payload, mtype
 
 
 def _fake_decode(payload: bytes, media_type: str) -> tuple[int, int, int, list[float]]:
@@ -87,15 +107,16 @@ def _fake_decode(payload: bytes, media_type: str) -> tuple[int, int, int, list[f
 def decode_media(
     media: DataFrame, deterministic_fake: bool = False
 ) -> DataFrame:
-    """(media_ref, payload, media_type) → decoded metadata + feature
-    vector. Arrow-batched ``mapInPandas``; payload never leaves the
-    stage."""
+    """(…, media_ref, payload, media_type) → the same rows without
+    ``payload``, plus decoded metadata and a feature vector. Arrow-
+    batched ``mapInPandas``; payload never leaves the stage, every other
+    input column passes through."""
     if not deterministic_fake:
         raise NotImplementedError(
             "no image/audio codecs in this environment; pass "
             "deterministic_fake=True for the seeded stand-in codec"
         )
-    src = media.select("media_ref", "payload", "media_type")
+    kept = [f for f in media.schema.fields if f.name != "payload"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -103,18 +124,14 @@ def decode_media(
                 _fake_decode(p, t)
                 for p, t in zip(pdf["payload"], pdf["media_type"])
             ]
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"].values,
-                    "media_type": pdf["media_type"].values,
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                    "feature": [d[3] for d in decoded],
-                }
-            )
+            out = pdf.drop(columns="payload")
+            out["width"] = [d[0] for d in decoded]
+            out["height"] = [d[1] for d in decoded]
+            out["n_frames"] = [d[2] for d in decoded]
+            out["feature"] = [d[3] for d in decoded]
+            yield out
 
-    return src.mapInPandas(gen, DECODED_SCHEMA)
+    return media.mapInPandas(gen, StructType(kept + DECODED_FIELDS))
 
 
 def filter_media(decoded: DataFrame, min_dim: int = 200, min_area: int = 40_000) -> DataFrame:
@@ -195,18 +212,16 @@ def media_pipeline(spans_df: DataFrame) -> DataFrame:
     """End-to-end: spans → media rows → decode (fake codec) → size
     filter → per-doc media stats. The aggregate output is small and
     deterministic — the pipeline's test surface."""
-    # NOT persisted: the decode UDF consumes the payload-bearing pass,
-    # while the metadata re-join side is a narrow (doc_id, media_ref)
-    # projection that Catalyst prunes to a payload-free explode — the
-    # cheap recompute beats pinning payload binaries in executor storage
-    # (a persist here leaked one payload-sized cache per invocation for
-    # the session's lifetime, with no post-action hook to release it)
-    media = media_table_from_spans(spans_df)
-    decoded = decode_media(media, deterministic_fake=True)
-    kept = filter_media(decoded)
-    joined = media.select("doc_id", "media_ref").join(kept, "media_ref")
+    # one pass: the decode kernel carries doc_id through, so the kept
+    # rows group by their own doc (a re-join on media_ref would scan
+    # and span the documents a second time, and would credit a doc with
+    # another doc's item whose media_ref hash collides with one of its
+    # own)
+    kept = filter_media(
+        decode_media(media_table_from_spans(spans_df), deterministic_fake=True)
+    )
     return (
-        joined.groupBy("doc_id")
+        kept.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_media"),
             F.sum((F.col("media_type") == "video").cast("int")).alias("n_videos"),

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..functions.exprcache import session_expr
+
 SCALE = 1000  # quantization: q = round(x * SCALE)
 N_PLANES = 8  # LSH: 2^8 = 256 buckets
 DIM = 64
@@ -166,9 +168,10 @@ def _cosine_display_sql(qd: str, na2: str, nb2: str) -> str:
 
 def _qframe(embeddings: DataFrame) -> DataFrame:
     """(vec_id, q, n2): the quantized corpus every variant starts from."""
-    return embeddings.select(
-        "vec_id", quantized(F.col("embedding")).alias("q")
-    ).withColumn("n2", qnorm2(F.col("q")))
+    q, n2 = session_expr(
+        "_qframe", lambda: (quantized(F.col("embedding")), qnorm2(F.col("q")))
+    )
+    return embeddings.select("vec_id", q.alias("q")).withColumn("n2", n2)
 
 
 def _probes(qf: DataFrame, *cols) -> DataFrame:
@@ -191,7 +194,9 @@ def _score(cand: DataFrame, *keys: str) -> DataFrame:
         "probe_id",
         "vec_id",
         *keys,
-        qdot(F.col("pq"), F.col("q")).alias("dot_q"),
+        session_expr("_score", lambda: qdot(F.col("pq"), F.col("q"))).alias(
+            "dot_q"
+        ),
         "pn2",
         "n2",
     )
@@ -1239,9 +1244,10 @@ def semantic_dedup(
         F.col("n2").alias("na2"),
         "list_id",
     )
-    d = qdot(F.col("qa"), F.col("q"))
-    near = (F.col("id_a") < F.col("vec_id")) & _near(
-        d, F.col("na2"), F.col("n2"), num, den
+    near = session_expr(
+        ("semantic_dedup.near", num, den),
+        lambda: (F.col("id_a") < F.col("vec_id"))
+        & _near(qdot(F.col("qa"), F.col("q")), F.col("na2"), F.col("n2"), num, den),
     )
     return (
         assigned.join(earlier, "list_id")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprcache import session_expr
 from ..functions.hashing import hash64, hash64_sql
 from ..functions.text import TOKEN_SPLIT_RE, ascii_lower, ascii_lower_sql
 
@@ -34,11 +35,9 @@ BLOCK_TOKENS = 8  # tokens per text span
 MEDIA_EVERY = 3  # a media span follows every 3rd text block
 
 
-def build_spans(documents: DataFrame) -> DataFrame:
-    """flat documents(doc_id,text,...) → contract spans table.
-
-    Keeps lang/source columns for downstream grouping.
-    """
+def _span_trees() -> tuple:
+    """(toks, n_blocks, spans_flat, spans): build_spans' un-aliased
+    trees, each reading the previous one by name."""
     # null text → no spans (deserialization drops unparseable rows,
     # WebPageDeserializationBolt.java:41-52); coalesce keeps the row
     # with an empty span list rather than poisoning downstream exprs
@@ -49,8 +48,6 @@ def build_spans(documents: DataFrame) -> DataFrame:
         lambda t: t != F.lit(""),
     )
     n_blocks = F.ceil(F.size(F.col("toks")) / F.lit(BLOCK_TOKENS)).cast("int")
-
-    df = documents.withColumn("toks", toks).withColumn("n_blocks", n_blocks)
 
     block_text = lambda i: F.array_join(  # noqa: E731
         F.slice(F.col("toks"), i * BLOCK_TOKENS + 1, BLOCK_TOKENS), " "
@@ -93,13 +90,10 @@ def build_spans(documents: DataFrame) -> DataFrame:
 
     # guard: F.sequence(0, -1) yields [0, -1] (negative step inferred),
     # which would fabricate phantom spans for empty documents
-    df = df.withColumn(
-        "spans_flat",
-        F.when(F.col("n_blocks") > 0, F.flatten(spans_nested)).otherwise(
-            F.array().cast(
-                "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-            )
-        ),
+    spans_flat = F.when(F.col("n_blocks") > 0, F.flatten(spans_nested)).otherwise(
+        F.array().cast(
+            "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+        )
     )
     # renumber offsets to document order (the per-row invariant)
     spans = F.transform(
@@ -111,11 +105,26 @@ def build_spans(documents: DataFrame) -> DataFrame:
             i.cast("int").alias("offset"),
         ),
     )
-    return df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        spans.alias("spans"),
-        "lang",
-        "source",
+    return toks, n_blocks, spans_flat, spans
+
+
+def build_spans(documents: DataFrame) -> DataFrame:
+    """flat documents(doc_id,text,...) → contract spans table.
+
+    Keeps lang/source columns for downstream grouping. The trees are
+    built once per session (functions/exprcache.py).
+    """
+    toks, n_blocks, spans_flat, spans = session_expr("build_spans", _span_trees)
+    return (
+        documents.withColumn("toks", toks)
+        .withColumn("n_blocks", n_blocks)
+        .withColumn("spans_flat", spans_flat)
+        .select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            spans.alias("spans"),
+            "lang",
+            "source",
+        )
     )
 
 
@@ -158,9 +167,13 @@ def explode_spans(spans_df: DataFrame) -> DataFrame:
     The UDTF-like 1-page→N-spans shape of the reference's extraction
     stream, as a generator expression Catalyst understands.
     """
+    # explode_outer + not-null: the same rows as explode, but a plain
+    # explode makes Catalyst infer size(spans) > 0 and push it below
+    # build_spans' projection, where it evaluates the whole span tree a
+    # second time per document
     return spans_df.select(
-        "doc_id", "lang", "source", F.explode("spans").alias("span")
-    ).select(
+        "doc_id", "lang", "source", F.explode_outer("spans").alias("span")
+    ).filter(F.col("span").isNotNull()).select(
         "doc_id",
         "lang",
         "source",

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exprcache import session_expr
 from ..functions.text import remove_stopwords, tokenize
 from .spans import explode_spans
 
@@ -25,7 +26,9 @@ from .spans import explode_spans
 def span_terms(spans_df: DataFrame) -> DataFrame:
     """One row per (doc_id, source, term) occurrence from text spans."""
     txt = explode_spans(spans_df).filter(F.col("kind") == "text")
-    toks = remove_stopwords(tokenize(F.col("text")))
+    toks = session_expr(
+        "span_terms", lambda: remove_stopwords(tokenize(F.col("text")))
+    )
     return txt.select(
         "doc_id", "lang", "source", F.explode(toks).alias("term")
     )

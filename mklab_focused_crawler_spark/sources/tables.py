@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -43,8 +44,34 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def _widen_tiny_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Unsplittable-tiny-scan guard.
+def dataset_key(path: str) -> tuple:
+    """File identity of a parquet dataset: (path, mtime_ns, size), and
+    for a Spark-written DIRECTORY every data file's (relpath, size,
+    mtime_ns), walked recursively. A rewrite that replaces part files in
+    place changes the key even when the directory's own stat doesn't
+    (same entry count leaves dir mtime unchanged on some filesystems).
+    The one "same dataset" rule: the scan memo below and every
+    per-corpus artifact cache key on it."""
+    st = os.stat(path)
+    key: tuple = (path, st.st_mtime_ns, st.st_size)
+    if os.path.isdir(path):
+        parts = []
+        for root, dirs, files in os.walk(path):
+            # _SUCCESS / .crc / _temporary don't carry data
+            dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+            for f in sorted(files):
+                if f.startswith((".", "_")):
+                    continue
+                fp = os.path.join(root, f)
+                ps = os.stat(fp)
+                parts.append((os.path.relpath(fp, path), ps.st_size, ps.st_mtime_ns))
+        key = key + (tuple(parts),)
+    return key
+
+
+def _widen_parts(spark: SparkSession, path: str) -> int:
+    """Unsplittable-tiny-scan guard: the round-robin partition count to
+    widen a scan to, or 0 to leave it as planned.
 
     Spark assigns scan tasks by byte splits (``files.maxPartitionBytes``),
     and a parquet row group is the smallest splittable unit — so a table
@@ -67,13 +94,30 @@ def _widen_tiny_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame
     nbytes = _dir_bytes(path)
     est_splits = max(1, -(-nbytes // max_split))
     if nbytes < _WIDEN_MIN_BYTES or est_splits * 2 >= par:
-        return df
-    return df.repartition(par)
+        return 0
+    return par
+
+
+# (SparkContext, *dataset_key) -> (inferred schema, _widen_parts). A
+# parquet read without a schema runs one footer-reading Spark job, and
+# the widen decision costs a conf read, a parallelism lookup and a
+# directory walk: both are paid once per session and file version, and
+# later reads pass the remembered schema (the reference declares each
+# stream's fields once, up front: declareOutputFields). A rewritten
+# file has a new key and is inferred afresh.
+_SCANS: dict[tuple, tuple[StructType, int]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    return _widen_tiny_scan(spark, spark.read.parquet(path), path)
+    key = (spark.sparkContext,) + dataset_key(path)
+    scan = _SCANS.get(key)
+    if scan is None:
+        inferred = spark.read.parquet(path).schema
+        scan = _SCANS.setdefault(key, (inferred, _widen_parts(spark, path)))
+    schema, parts = scan
+    df = spark.read.schema(schema).parquet(path)
+    return df.repartition(parts) if parts else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

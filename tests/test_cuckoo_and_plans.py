@@ -15,6 +15,7 @@ from mklab_focused_crawler_spark.operators.cuckoo import (
     delete_keys,
     filter_unseen_cuckoo,
 )
+from tests.conftest import SF01_DIR
 
 # --------------------------- cuckoo core -----------------------------
 
@@ -113,6 +114,25 @@ def test_parquet_scan_prunes_and_pushes(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,100)" in plan
     assert "ReadSchema: struct<doc_id:bigint,source:string>" in plan
+
+
+@pytest.mark.parametrize("op", ["minhash", "dsir", "decontam", "jaccard"])
+def test_ngram_ops_tokenize_once_per_row(spark, op):
+    """ngrams reads its token array several times, so the tokens are an
+    attribute first: no projection of the optimized plan holds more
+    than one copy of the split tokenizer."""
+    from mklab_focused_crawler_spark.operators import decontam, dedup, dsir
+
+    docs = spark.read.parquet(f"{SF01_DIR}/documents.parquet")
+    df = {
+        "minhash": lambda: dedup.minhash_signatures(docs),
+        "dsir": lambda: dsir._bucket_occurrences(docs),
+        "decontam": lambda: decontam._gram_hashes(docs, decontam.GRAM_N),
+        "jaccard": lambda: dedup.jaccard_topk(docs),
+    }[op]()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    per_node = [line.count("split(") for line in plan.splitlines()]
+    assert max(per_node) == 1, plan
 
 
 def test_fetch_join_broadcasts_claimed_side(spark):

@@ -1,5 +1,5 @@
-"""The crawl super-step's fixed driver cost: what does not depend on the
-claimed batch is paid once per session, not once per iteration.
+"""Fixed driver cost: what does not depend on the claimed batch (crawl
+super-step) or on the call (corpus query) is paid once per session.
 
 - the per-iteration job budget and codegen budget of a steady-state
   iteration (no schema-inference job, no large generated class
@@ -7,6 +7,8 @@ claimed batch is paid once per session, not once per iteration.
 - SnapshotTable's schema memo (reads stop re-inferring the schema, and
   every commit that changes the schema is seen);
 - the once-per-session expression cache (functions/exprcache.py);
+- ``load_table``'s scan memo (a warm corpus query builder starts no
+  Spark job), and media_pipeline's one documents scan;
 - a Python stage pays for its kernel, not for re-parsing every zip
   archive on the worker path each task (pydaemon.py), and an Arrow
   kernel's output is evaluated once per query (semantic_dedup and
@@ -25,13 +27,22 @@ import zipfile
 import zipimport
 from collections import Counter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+
+import __spark_entry__ as entry
 
 from mklab_focused_crawler_spark import pydaemon, session
 from mklab_focused_crawler_spark.functions import exprcache
 from mklab_focused_crawler_spark.operators import crawl, extraction
 from mklab_focused_crawler_spark.operators import similarity as sim
+from mklab_focused_crawler_spark.operators.multimodal import (
+    _fake_decode,
+    media_pipeline,
+)
+from mklab_focused_crawler_spark.operators.spans import build_spans
 from mklab_focused_crawler_spark.operators.crawl import (
     BROADCAST_ANTI_MAX_KEYS,
     CrawlLoop,
@@ -45,6 +56,7 @@ from mklab_focused_crawler_spark.sources.synthetic_web import (
     generate_seeds,
     synthetic_fetch,
 )
+from mklab_focused_crawler_spark.sources.tables import load_table
 from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
 from tests.conftest import SF01_DIR
 
@@ -201,6 +213,111 @@ def test_expression_cache_self_union_and_rebuild(spark, monkeypatch):
     assert k2 is not k1
     monkeypatch.undo()
     assert extraction._native_kernel("html") is not k2
+
+
+def test_load_table_schema_memo_follows_rewrites(spark, tmp_path):
+    """A second load of the same file starts no Spark job; a file
+    rewritten with another schema, and a directory that gains a part
+    file, are inferred afresh."""
+    sc = spark.sparkContext
+    sf = str(tmp_path)
+    path = os.path.join(sf, "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, sf, "t").count() == 2
+    jobs0 = _job_ids(sc)
+    df = load_table(spark, sf, "t")
+    assert _job_ids(sc) == jobs0  # remembered schema: no footer job
+    assert df.columns == ["a"]
+
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    df = load_table(spark, sf, "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
+
+    d = os.path.join(sf, "d.parquet")
+    spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(d)
+    assert load_table(spark, sf, "d").count() == 1
+    pq.write_table(pa.table({"a": [2, 3]}), os.path.join(d, "part-99999.parquet"))
+    jobs0 = _job_ids(sc)
+    df = load_table(spark, sf, "d")
+    assert _untagged_jobs(sc, _job_ids(sc) - jobs0)  # inferred afresh
+    assert df.count() == 3
+    jobs0 = _job_ids(sc)
+    load_table(spark, sf, "d")
+    assert _job_ids(sc) == jobs0
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["semantic_dedup", "rolling_top_events", "top_terms_per_source", "media_pipeline"],
+)
+def test_warm_corpus_query_builder_starts_no_job(spark, name):
+    """Once a query has been built in this session (its scan schema and
+    any per-corpus artifact remembered), building it again starts no
+    Spark job. cosine_topk_gemm is left out: it fetches its probe
+    chunks while building, by design."""
+    q = entry.queries()[name]
+    q(spark, SF01_DIR)
+    jobs0 = _job_ids(spark.sparkContext)
+    q(spark, SF01_DIR)
+    assert _job_ids(spark.sparkContext) == jobs0
+
+
+def test_media_pipeline_reads_documents_once(spark):
+    """The decode kernel carries doc_id through: one documents scan,
+    one Python stage and no join back to the media rows. The spans are
+    built once per document (no inferred explode filter pushed below
+    build_spans' projection)."""
+    df = entry.queries()["media_pipeline"](spark, SF01_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation ") == 1, plan
+    assert plan.count("split(") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_media_pipeline_counts_only_its_own_items(spark):
+    """Two docs whose media spans carry the same media_ref each count
+    only their own item (a join back on media_ref credits each doc
+    with the other's)."""
+    import hashlib
+
+    def passes(ref):
+        w, h, _, _ = _fake_decode(hashlib.md5(ref.encode()).digest() * 4, "image")
+        return w >= 200 and h >= 200 and w * h >= 40_000
+
+    ref = next(r for r in (f"Web#{i}" for i in range(100)) if passes(r))
+    span = ("media", "", ref, 0)
+    spans = spark.createDataFrame(
+        [("d1", [span], "en", "s"), ("d2", [span], "en", "s")],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>, lang string, source string",
+    )
+    got = {r["doc_id"]: r["n_media"] for r in media_pipeline(spans).collect()}
+    assert got == {"d1": 1, "d2": 1}
+
+
+def test_build_spans_self_union_and_self_join(spark):
+    """build_spans' trees are cached per session: two outputs built from
+    them still have their own attributes, so a self-union and a
+    self-join return the rows each output gives alone."""
+    docs = load_table(spark, SF01_DIR, "documents")
+    a = build_spans(docs.filter(F.col("doc_id") % 2 == 0))
+    b = build_spans(docs.filter(F.col("doc_id") % 2 == 1))
+    alone_a, alone_b = a.collect(), b.collect()
+    assert alone_a and alone_b
+    key = lambda r: r["doc_id"]  # noqa: E731
+    union = a.unionByName(b).collect()
+    assert sorted(union, key=key) == sorted(alone_a + alone_b, key=key)
+
+    whole = build_spans(docs)
+    other = build_spans(docs).select("doc_id", F.col("spans").alias("spans2"))
+    joined = whole.join(other, "doc_id").collect()
+    assert len(joined) == len(alone_a) + len(alone_b)
+    assert all(r["spans"] == r["spans2"] for r in joined)
+    assert sorted((r["doc_id"], r["spans"]) for r in joined) == sorted(
+        (r["doc_id"], r["spans"]) for r in alone_a + alone_b
+    )
 
 
 def _write_module_zip(archive, module: str, value: int) -> None:
