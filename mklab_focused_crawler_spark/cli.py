@@ -67,9 +67,6 @@ def _build_parser() -> argparse.ArgumentParser:
     c.add_argument("--master", default=None)
     c.add_argument("--window-ms", type=int, default=1000)
     c.add_argument("--ttl-iterations", type=int, default=None)
-    c.add_argument(
-        "--seen-filter", choices=["bloom", "cuckoo", "none"], default="bloom"
-    )
     # page-store mode
     c.add_argument("--pages", default=None, help="page-store parquet path")
     c.add_argument(
@@ -153,10 +150,22 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 _CLI_META = "cli_meta.json"
+# the layout/semantics-critical loop config a store records at creation.
+# Only these keys are read back: stores written by older versions also
+# record knobs that no longer exist (the seen-filter choice)
+_STORE_KEYS = ("window_ms", "ttl_iterations")
 
 
 def _store_meta_path(root: str) -> str:
     return os.path.join(root, _CLI_META)
+
+
+def _stored_config(root: str) -> dict:
+    if not os.path.exists(_store_meta_path(root)):
+        return {}
+    with open(_store_meta_path(root)) as f:
+        meta = json.load(f)
+    return {k: meta[k] for k in _STORE_KEYS if k in meta}
 
 
 def _run_crawl(args) -> dict:
@@ -182,18 +191,13 @@ def _run_crawl(args) -> dict:
     if args.resume and not os.path.exists(args.root):
         raise SystemExit(f"--resume: no crawl store at {args.root}")
 
-    loop_kw = dict(
-        window_ms=args.window_ms,
-        ttl_iterations=args.ttl_iterations,
-        seen_filter=None if args.seen_filter == "none" else args.seen_filter,
-    )
-    if args.resume and os.path.exists(_store_meta_path(args.root)):
+    loop_kw = dict(window_ms=args.window_ms, ttl_iterations=args.ttl_iterations)
+    if args.resume:
         # the store's layout (TTL → doc_bucket-partitioned documents)
         # and gate semantics are decided at creation — a resume with
         # different flags would append a mismatched layout or change
         # crawl semantics mid-run, so the recorded config wins
-        with open(_store_meta_path(args.root)) as f:
-            loop_kw.update(json.load(f))
+        loop_kw.update(_stored_config(args.root))
 
     from .operators.crawl import CrawlLoop
 
@@ -239,14 +243,7 @@ def _run_crawl(args) -> dict:
         # record the layout/semantics-critical config so later --resume
         # and lineage reconstruct the loop the store was created with
         with open(_store_meta_path(args.root), "w") as f:
-            json.dump(
-                {
-                    "window_ms": loop_kw["window_ms"],
-                    "ttl_iterations": loop_kw["ttl_iterations"],
-                    "seen_filter": loop_kw["seen_filter"],
-                },
-                f,
-            )
+            json.dump({k: loop_kw[k] for k in _STORE_KEYS}, f)
     stats = loop.run(
         pages,
         robots,
@@ -378,10 +375,7 @@ def _run_lineage(args) -> None:
 
     # reconstruct the creation-time config: a TTL store's documents
     # table is doc_bucket-partitioned and reads wrongly without it
-    kw = {}
-    if os.path.exists(_store_meta_path(args.root)):
-        with open(_store_meta_path(args.root)) as f:
-            kw = json.load(f)
+    kw = _stored_config(args.root)
     spark = _session(args.master)
     loop = CrawlLoop(spark, args.root, **kw)
     for r in loop.lineage().collect():

@@ -23,8 +23,8 @@ one deterministic BSP super-step over snapshot-committed tables
                   counters collected on the way as observe() metrics.
 5. **discover** — incremental (changelog) re-read of the just-committed
                   document batch → explode out-links → canonicalize →
-                  filter-pruned seen gate (operators/seen.py bloom or
-                  operators/cuckoo.py; StatusCheckBolt first-seen-wins)
+                  filter-pruned seen gate (operators/seen.py;
+                  StatusCheckBolt first-seen-wins)
                   → batch dedup → score (RankerBolt formula) → schedule.
 6. **commit**   — frontier/claims/metrics snapshot commits
                   (storage/snapshot.py). Resume = re-read CURRENT.
@@ -71,13 +71,15 @@ efficiency of the rewrite-everything round-1 loop:
   far below core count (6.6 GB/s at 2 cores, 10.5 at 8) — so the
   scaling bench uses ``fetch_fn``: fetch+extract is then CPU-dense and
   cache-resident, which is also the real crawler's cost shape.
-- **Probabilistic filter maintenance is driver-side in the broadcast
-  regime.** Below BROADCAST_BLOOM_MAX_BYTES the per-bucket bloom lives
-  on the driver ({bucket: bits}), probed via one broadcast per
-  iteration and merged in place with numpy from the new-URL keys —
-  zero per-iteration filter jobs (rebuild on seen-set doubling).
-  Beyond broadcast size, the cogroup-by-bucket prune + incremental
-  cogroup merge into the filter table takes over.
+- **One seen gate, three size regimes.** The seen-set size alone picks
+  the regime: an exact broadcast anti-join up to
+  BROADCAST_ANTI_MAX_KEYS; then a per-bucket Bloom filter held on the
+  driver ({bucket: bits}), probed via one broadcast per iteration and
+  merged in place with numpy from the new-URL keys — zero
+  per-iteration filter jobs; beyond BROADCAST_BLOOM_MAX_BYTES, the
+  cogroup-by-bucket prune + incremental cogroup merge into the filter
+  table. Either Bloom form rebuilds from the live seen set once the
+  keys merged since its build outnumber the keys it was built for.
 - **Independent commits overlap.** The claim-tombstone append runs on
   a driver thread during the discover job; the 4-row metrics commit is
   a driver-side Arrow write (no job at all).
@@ -85,8 +87,9 @@ efficiency of the rewrite-everything round-1 loop:
   set, seen-membership and claim tombstones both age out, so expired
   URLs become claimable again; re-fetched documents route through
   ``SnapshotTable.merge`` (WebPagesUpdaterBolt.java:70-92 upsert), not
-  blind append. The cuckoo seen-filter (delete-capable) physically
-  evicts expired keys; the bloom path filters them at join time only.
+  blind append. Expired keys are filtered at join time; they leave
+  the Bloom bits at its next rebuild (a stale bit only costs an exact
+  confirm).
 """
 
 from __future__ import annotations
@@ -106,10 +109,17 @@ from ..sources.synthetic_web import (
     generate_seeds,
 )
 from ..storage.snapshot import SnapshotTable
-from .cuckoo import build_cuckoo, delete_keys, filter_unseen_cuckoo, insert_keys
 from .extraction import extract_articles_native as extract_articles
 from .frontier import claim_batch, expand_redirects
-from .seen import build_bloom, filter_unseen, merge_bloom, with_seen_key
+from .seen import (
+    BITS_PER_KEY,
+    build_bloom,
+    collect_bloom,
+    filter_unseen,
+    merge_bloom,
+    merge_bloom_driver,
+    with_seen_key,
+)
 
 DEFAULT_NOW_MS = BASE_MS + 86_400_000  # fixed "now": 2024-01-02T00:00:00Z
 N_BUCKETS_DEFAULT = 32
@@ -131,14 +141,6 @@ BROADCAST_ANTI_MAX_KEYS = 200_000
 # the seen-prune never shuffles candidates; above it (≈10^9+ seen keys)
 # the cogroup-by-bucket path takes over. See operators/seen.filter_unseen.
 BROADCAST_BLOOM_MAX_BYTES = 256 << 20
-# Below this seen-set size a fresh per-iteration filter build (one scan
-# of a small table) is cheaper than maintaining the filter table
-# incrementally; above it, rebuild cost grows with the seen set while
-# merge cost stays proportional to the new-key batch — switch to
-# incremental merge + rebuild-on-doubling. 500k: the rebuild scan is a
-# flat ~3s/iteration cost well before it, and the incremental cogroup
-# is O(new keys) regardless.
-FILTER_INCREMENTAL_MIN_KEYS = 500_000
 # Fold claim tombstones into the frontier when they exceed this fraction
 # of total frontier rows (amortized O(1)/row; Iceberg MERGE + compaction
 # on a real cluster). 1.0 balances the costs: carrying tombstones adds
@@ -147,6 +149,17 @@ FILTER_INCREMENTAL_MIN_KEYS = 500_000
 # rewrites the whole frontier — folding below tombs ≈ frontier pays
 # O(frontier) to avoid less-than-O(frontier) of anti-join build.
 COMPACT_TOMBSTONE_FRAC = 1.0
+
+
+def seen_regime(n_seen: int) -> int:
+    """The seen gate's regime for a seen set of ``n_seen`` keys:
+    1 = exact broadcast anti-join, 2 = driver-held Bloom probe + exact
+    confirm, 3 = cogroup-by-bucket Bloom prune + exact confirm."""
+    if n_seen <= BROADCAST_ANTI_MAX_KEYS:
+        return 1
+    # keys → approx filter bytes
+    return 2 if n_seen * 1.2 * BITS_PER_KEY / 8 <= BROADCAST_BLOOM_MAX_BYTES else 3
+
 
 _FRONTIER_COLS = (
     "url",
@@ -219,8 +232,7 @@ def _candidate_keys(urls_df: DataFrame, n_buckets: int) -> DataFrame:
 class CrawlLoop:
     """Owns the iteration control Spark lacks natively (SURVEY §7 hard
     part #5) and the snapshot tables: frontier (= seen set), claims
-    (tombstones), documents, metrics, and the probabilistic seen-filter
-    (bloom or cuckoo)."""
+    (tombstones), documents, metrics, and the Bloom seen-filter."""
 
     def __init__(
         self,
@@ -228,7 +240,6 @@ class CrawlLoop:
         root: str,
         n_buckets: int = N_BUCKETS_DEFAULT,
         now_ms: int = DEFAULT_NOW_MS,
-        seen_filter: str | None = "bloom",
         window_ms: int = 1000,
         ttl_iterations: int | None = None,
         transport_factory=None,
@@ -269,7 +280,6 @@ class CrawlLoop:
         Mutually exclusive with ``transport_factory``; when set,
         ``run()`` takes an explicit redirect map and pages_meta and
         ``pages`` may be None."""
-        assert seen_filter in (None, "bloom", "cuckoo")
         assert fetch_join in ("broadcast", "bucketed")
         assert transport_factory is None or fetch_fn is None
         assert transport_redirects == 0 or transport_factory is not None
@@ -279,7 +289,6 @@ class CrawlLoop:
         self.spark = spark
         self.now_ms = now_ms
         self.n_buckets = n_buckets
-        self.seen_filter = seen_filter
         self.window_ms = window_ms  # politeness window per super-step
         self.ttl = ttl_iterations  # CrawlDecider TTL, in super-steps
         self.transport_factory = transport_factory
@@ -297,16 +306,17 @@ class CrawlLoop:
             partition_by=("doc_bucket",) if ttl_iterations is not None else (),
         )
         self.metrics = SnapshotTable(root, "metrics")
-        self.filter_table = SnapshotTable(root, "seen_filter")
+        self.filter_table = SnapshotTable(root, "seen_bloom")
         self._n_seen: int | None = None  # frontier rows (= seen keys)
         self._n_tombs: int | None = None  # un-compacted claim tombstones
-        # keys in the filter at its last from-scratch build; rebuild at
-        # the new size when the merged key count doubles it (FPR /
-        # occupancy creep guard)
-        self._filter_built_keys: int | None = None
+        # occupancy of the current Bloom filter (driver-held or table):
+        # keys its last build was sized for, and keys merged since. A
+        # rebuild is due once merged > built (FPR creep guard); None =
+        # no filter built by this loop yet
+        self._filter_keys: int | None = None
+        self._filter_merged = 0
         self._bloom_np: dict | None = None  # driver bloom (broadcast regime)
         self._bloom_bc = None  # live broadcast of _bloom_np (1 per iter)
-        self._bloom_built_keys: int | None = None
         self._meta: DataFrame | None = None  # cached (url, shares, pub_ms)
         self._redirects: DataFrame | None = None  # cached redirect closure
         self._host_delays_bc = None  # {host: delay} for live redirect hops
@@ -332,12 +342,8 @@ class CrawlLoop:
         )
         self._n_seen = self.frontier.read(self.spark).count()
         self._n_tombs = 0
-        if self.seen_filter and not (
-            self.seen_filter == "bloom" and self._n_seen <= BROADCAST_ANTI_MAX_KEYS
-        ):
-            # anti-join regime needs no filter at all; it is (re)built
-            # on demand if the seen set ever outgrows the broadcast
-            self._rebuild_filter(0)
+        # no filter build here: the Bloom regimes build theirs on first
+        # use, from the same frontier
 
     def seen_df(
         self, iteration: int | None = None, frontier_df: DataFrame | None = None
@@ -414,54 +420,46 @@ class CrawlLoop:
         row = df.agg(F.max("iteration")).collect()[0][0]
         return int(row) + 1 if row is not None else 0
 
-    # -- probabilistic seen-filter maintenance --------------------------
-    def _rebuild_filter(self, iteration: int, frontier_df: DataFrame | None = None) -> None:
-        seen = self.seen_df(iteration, frontier_df)
-        build = build_bloom if self.seen_filter == "bloom" else build_cuckoo
-        self.filter_table.overwrite(build(seen))
-        self._filter_built_keys = self._n_seen
-        self._bloom_np = None  # stale driver copy (re-collected on demand)
-        if self._bloom_bc is not None:  # broadcast of the stale bits
-            self._bloom_bc.destroy()
-            self._bloom_bc = None
+    # -- Bloom seen-filter maintenance ----------------------------------
+    def _build_filter(self, iteration: int, frontier_df: DataFrame | None, sink):
+        """Build the per-bucket Bloom filter from the live (TTL-filtered)
+        seen set into ``sink`` (a driver collect or a table overwrite)
+        and record the key count that build was sized for."""
+        obs = Observation()
+        built = build_bloom(self.seen_df(iteration, frontier_df)).observe(
+            obs, F.sum("n_keys").alias("n_keys")
+        )
+        out = sink(built)
+        self._filter_keys = int(obs.get["n_keys"] or 0)
+        self._filter_merged = 0
+        return out
+
+    def _filter_stale(self) -> bool:
+        return self._filter_keys is None or self._filter_merged > self._filter_keys
 
     def _ensure_driver_bloom(self, iteration: int, frontier_df: DataFrame | None) -> dict:
         """Driver-held per-bucket bloom for the broadcast-probe regime:
         {bucket: (nbits, bits array)}. Rebuilt (one distributed build +
-        collect) on first use and when the seen set doubles; between
-        rebuilds it is maintained in place by a numpy merge of each
-        iteration's new keys (``seen.merge_bloom_driver``) — replacing
-        the round-1 per-iteration Spark jobs (fresh build scan or
-        cogroup merge + filter-table commit), which were the dominant
-        core-count-independent serial term of the discover stage. Under
-        TTL, expired keys persist until the next rebuild — a safe
-        over-approximation (bloom hits are exactly confirmed)."""
-        from .seen import collect_bloom
-
-        if (
-            self._bloom_np is None
-            or self._bloom_built_keys is None
-            or self._n_seen > 2 * self._bloom_built_keys
-        ):
-            self._bloom_np = collect_bloom(
-                build_bloom(self.seen_df(iteration, frontier_df))
-            )
-            self._bloom_built_keys = self._n_seen
+        collect) on first use and when its occupancy outgrows its
+        sizing; between rebuilds it is maintained in place by a numpy
+        merge of each iteration's new keys (``seen.merge_bloom_driver``)
+        — no per-iteration Spark filter job. Under TTL, expired keys
+        persist until the next rebuild — a safe over-approximation
+        (bloom hits are exactly confirmed)."""
+        if self._bloom_np is None or self._filter_stale():
+            self._bloom_np = self._build_filter(iteration, frontier_df, collect_bloom)
         return self._bloom_np
 
-    def _filter_df(
-        self, iteration: int, incremental: bool, frontier_df: DataFrame | None = None
-    ) -> DataFrame:
-        if not incremental:
-            # small seen set: fresh build is one cheap scan
-            build = build_bloom if self.seen_filter == "bloom" else build_cuckoo
-            return build(self.seen_df(iteration, frontier_df))
-        if (
-            not self.filter_table.exists()
-            or self._filter_built_keys is None
-            or self._n_seen > 2 * self._filter_built_keys
-        ):
-            self._rebuild_filter(iteration, frontier_df)
+    def _filter_df(self, iteration: int, frontier_df: DataFrame | None) -> DataFrame:
+        """The filter table for the cogroup regime, rebuilt on first use
+        (a table from an earlier process or a driver bloom from the
+        broadcast regime is never trusted) and on occupancy."""
+        if self._bloom_np is not None or self._filter_stale():
+            self._build_filter(iteration, frontier_df, self.filter_table.overwrite)
+            self._bloom_np = None  # the counters now describe the table
+            if self._bloom_bc is not None:  # broadcast of the driver bits
+                self._bloom_bc.destroy()
+                self._bloom_bc = None
         return self.filter_table.read(self.spark)
 
     # ------------------------------------------------------------------
@@ -733,26 +731,16 @@ class CrawlLoop:
         # (the iteration's widest map stage) executes twice
         cand = _candidate_keys(links, self.n_buckets).persist()
         seen = self.seen_df(iteration, fr)
-        incremental = self._n_seen >= FILTER_INCREMENTAL_MIN_KEYS
-        anti_broadcast = (
-            self.seen_filter == "bloom" and self._n_seen <= BROADCAST_ANTI_MAX_KEYS
-        )
-        bloom_broadcast = (
-            not anti_broadcast
-            and self.seen_filter == "bloom"
-            and (self._n_seen * 1.2 * 12 / 8)  # keys → approx filter bytes
-            <= BROADCAST_BLOOM_MAX_BYTES
-        )
-        if anti_broadcast:
-            # small-seen regime: exact broadcast anti-join, no filter
-            # maintenance at all (the driver bloom rebuilds from the
-            # frontier on first use if the seen set outgrows this)
-            pruned = filter_unseen(cand, seen, None, broadcast_seen=True)
-        elif bloom_broadcast:
+        regime = seen_regime(self._n_seen)
+        if regime == 1:
+            # small seen set: exact broadcast anti-join, no filter
+            # maintenance at all (the driver bloom builds from the
+            # frontier on first use once the seen set outgrows this)
+            bloom = None
+        elif regime == 2:
             # broadcast regime: the filter lives on the DRIVER
             # ({bucket: bits}), probed via one broadcast — no candidate
-            # shuffle, and maintenance is a numpy merge after commit
-            # (zero per-iteration filter jobs; rebuild on doubling).
+            # shuffle, and maintenance is a numpy merge after commit.
             # The bits change every iteration, so each needs a fresh
             # broadcast — destroy last iteration's NOW (its jobs all
             # completed at the previous new_urls.unpersist) instead of
@@ -762,17 +750,12 @@ class CrawlLoop:
             self._bloom_bc = self.spark.sparkContext.broadcast(
                 self._ensure_driver_bloom(iteration, fr)
             )
-            pruned = filter_unseen(cand, seen, self._bloom_bc)
-        elif self.seen_filter == "bloom":
+            bloom = self._bloom_bc
+        else:
             # beyond-broadcast regime (10^10 keys): cogroup-by-bucket
             # prune + incremental cogroup merge into the filter table
-            bloom = self._filter_df(iteration, incremental, fr)
-            pruned = filter_unseen(cand, seen, bloom, broadcast_bloom=False)
-        elif self.seen_filter == "cuckoo":
-            filt = self._filter_df(iteration, incremental, fr).persist()
-            pruned = filter_unseen_cuckoo(cand, seen, filt)
-        else:
-            pruned = filter_unseen(cand, seen, None)
+            bloom = self._filter_df(iteration, fr)
+        pruned = filter_unseen(cand, seen, bloom)
         obs_sched = Observation()
         # the per-iteration literals (first_seen_iter/claimed_iter) are
         # stamped AFTER the persist boundary, in the small frontier-append
@@ -787,25 +770,8 @@ class CrawlLoop:
         )
 
         jd("filter")
-        if (
-            self.seen_filter == "bloom"
-            and not anti_broadcast
-            and not bloom_broadcast
-            and incremental
-        ):
-            self.filter_table.overwrite(
-                merge_bloom(self.filter_table.read(self.spark), new_urls)
-            )
-        elif self.seen_filter == "cuckoo":
-            if incremental:
-                upd = insert_keys(filt, new_urls)
-                if self.ttl is not None:
-                    aging_out = fr.filter(
-                        F.col("first_seen_iter") == F.lit(iteration + 1 - self.ttl)
-                    )
-                    upd = delete_keys(upd, aging_out)
-                self.filter_table.overwrite(upd)
-            filt.unpersist()
+        if regime == 3:
+            self.filter_table.overwrite(merge_bloom(bloom, new_urls))
         # narrow-table writes coalesce to a handful of files: these
         # frames sit in cache at full core-count partitioning, and tiny
         # per-task files just add scheduler + committer overhead
@@ -820,11 +786,9 @@ class CrawlLoop:
         )
         cand.unpersist()  # new_urls is materialized; cand no longer needed
         n_new = int(obs_sched.get["n_new"])
-        if bloom_broadcast:
+        if regime == 2:
             # in-place driver merge off the (cached) new-URL keys — the
             # broadcast regime's whole filter maintenance
-            from .seen import merge_bloom_driver
-
             merge_bloom_driver(
                 self._bloom_np,
                 new_urls.select("bucket", "url_hash").toArrow(),
@@ -853,6 +817,8 @@ class CrawlLoop:
             )
         )
         self._n_seen += n_new
+        if regime > 1:
+            self._filter_merged += n_new
         self._n_tombs += n_claimed
         jd("compact")
         self._maybe_compact()

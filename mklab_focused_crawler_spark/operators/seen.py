@@ -24,8 +24,9 @@ bits/key each bucket's filter is ~0.9 MB — safely inside an executor
 task, never on the driver. Candidates shuffle by the same ``bucket``
 key the seen table is bucketed on, so the cogroup is co-partitioned
 with the exact table's anti-join. The 24h TTL variant filters
-``first_seen_iter`` at join time; physical deletion would move to a
-cuckoo filter (delete-capable) — see operators/cuckoo.py.
+``first_seen_iter`` at join time. Expired keys stay in the Bloom bits
+until the crawl loop's next occupancy rebuild, which sizes the filter
+from the live keys only; until then a stale bit costs one exact confirm.
 """
 
 from __future__ import annotations
@@ -113,8 +114,7 @@ def merge_bloom(bloom: DataFrame, new_keys: DataFrame) -> DataFrame:
     incremental maintenance so the seen table is never rescanned per
     iteration (at 10^10 keys a from-scratch rebuild is a full-table
     scan). Buckets with no prior filter get a fresh one; ``n_keys``
-    tracks occupancy so the caller can trigger a per-bucket rebuild
-    when the insert-count outgrows the sizing (FPR creep guard).
+    counts every key OR-ed into the bucket's bits.
     Cogroup on bucket — co-partitioned with the bloom table."""
 
     def merge(blm: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
@@ -169,8 +169,8 @@ def merge_bloom_driver(table: dict, rows) -> None:
     table in place — the broadcast regime's incremental maintenance.
     One numpy pass per touched bucket (~µs/key); replaces a per-
     iteration Spark cogroup job + filter-table commit. Buckets with no
-    filter yet get one sized for the batch (the caller's rebuild-on-
-    doubling pass right-sizes it later).
+    filter yet get one sized for the batch (the caller's occupancy
+    rebuild right-sizes it later).
 
     ``rows`` is a pyarrow Table with (bucket, url_hash) columns — the
     whole batch stays columnar on the driver (a Row list spent more
@@ -203,55 +203,49 @@ def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: DataFrame | dict | Broadcast | None,
-    broadcast_bloom: bool = False,
-    broadcast_seen: bool = False,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is not in ``seen``.
 
     candidates must carry (url_hash, bucket). With a bloom, definite
     misses skip the anti-join; hits are confirmed exactly.
 
-    Three physical strategies, picked by the caller's size knowledge:
-    - ``broadcast_seen=True`` (bloom must be None): the seen KEYS
-      themselves broadcast into a single anti-join — exact in one JVM
-      hash probe, no confirm join, no shuffle of the candidates, and
-      **no Python anywhere**. Right while the per-iteration re-ship of
-      the raw keys (a driver-serial cost that grows with the frontier)
-      undercuts the bloom regime's fixed O(filter bits) cost — the
-      caller caps it at crawl.BROADCAST_ANTI_MAX_KEYS (200k), well
-      before broadcast capacity matters.
-    - ``broadcast_bloom=True``: broadcast the per-bucket filters (small
-      — up to a few hundred MB of bits; pass a ``collect_bloom`` dict
-      to skip the collect job) and probe them in a narrow scalar
-      pandas UDF — the candidates are **never shuffled** for the prune.
-      Right when the seen keys outgrow the anti-join regime but
-      12 bits/key of filter still fits (≲10^9 seen keys); this is the
-      regime the scaling bench lives in.
-    - cogroup (default): candidates shuffle by ``bucket`` to meet their
-      bucket's filter — the only option when the filters themselves are
-      too big to broadcast (the 10^10-key design point).
+    The physical strategy follows the form of ``bloom``, which the
+    caller picks by seen-set size:
+    - ``None``: the seen KEYS themselves broadcast into a single
+      anti-join — exact in one JVM hash probe, no confirm join, no
+      shuffle of the candidates, and **no Python anywhere**. Right while
+      the per-iteration re-ship of the raw keys (a driver-serial cost
+      that grows with the frontier) undercuts the bloom regime's fixed
+      O(filter bits) cost — the caller caps it at
+      crawl.BROADCAST_ANTI_MAX_KEYS (200k), well before broadcast
+      capacity matters.
+    - a ``collect_bloom`` dict or a ``Broadcast`` of one: the per-bucket
+      filters (small — up to a few hundred MB of bits) are probed in a
+      narrow scalar pandas UDF — the candidates are **never shuffled**
+      for the prune. Right when the seen keys outgrow the anti-join
+      regime but 12 bits/key of filter still fits (≲10^9 seen keys);
+      this is the regime the scaling bench lives in.
+    - a DataFrame of per-bucket filters: candidates shuffle by
+      ``bucket`` to meet their bucket's filter (cogroup) — the only
+      option when the filters themselves are too big to broadcast (the
+      10^10-key design point).
     """
     if bloom is None:
-        if broadcast_seen:
-            return candidates.join(
-                broadcast(seen.select("url_hash")), "url_hash", "left_anti"
-            )
         return candidates.join(
-            _seen_keys(seen), "url_hash", "left_anti"
+            broadcast(seen.select("url_hash")), "url_hash", "left_anti"
         )
 
-    if broadcast_bloom or isinstance(bloom, (dict, Broadcast)):
-        spark = candidates.sparkSession
-        if isinstance(bloom, Broadcast):
-            # caller-owned broadcast: the caller controls the lifecycle
-            # (the crawl loop re-broadcasts its driver-maintained bits
-            # each iteration and destroys the previous one — without
-            # that, per-iteration broadcasts pile up in the block
-            # managers until the JVM ContextCleaner happens to run)
-            bc = bloom
-        else:
-            table = bloom if isinstance(bloom, dict) else collect_bloom(bloom)
-            bc = spark.sparkContext.broadcast(table)
+    if isinstance(bloom, (dict, Broadcast)):
+        # a Broadcast is caller-owned: the caller controls its lifecycle
+        # (the crawl loop re-broadcasts its driver-maintained bits each
+        # iteration and destroys the previous one — without that,
+        # per-iteration broadcasts pile up in the block managers until
+        # the JVM ContextCleaner happens to run)
+        bc = (
+            bloom
+            if isinstance(bloom, Broadcast)
+            else candidates.sparkSession.sparkContext.broadcast(bloom)
+        )
 
         @F.pandas_udf("boolean")
         def might(url_hash: pd.Series, bucket: pd.Series) -> pd.Series:
@@ -274,30 +268,27 @@ def filter_unseen(
         checked = candidates.withColumn(
             "might_contain", might(F.col("url_hash"), F.col("bucket"))
         )
-        definite_new = checked.filter(~F.col("might_contain")).drop("might_contain")
-        maybe = checked.filter(F.col("might_contain")).drop("might_contain")
-        confirmed_new = maybe.join(_seen_keys(seen), "url_hash", "left_anti")
-        return definite_new.unionByName(confirmed_new)
+    else:
 
-    def check(cand: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0:
-            return cand.assign(might_contain=pd.Series([], dtype=bool))
-        if len(blm) == 0:
-            return cand.assign(might_contain=False)
-        nbits = int(blm["nbits"].iloc[0])
-        arr = np.frombuffer(blm["bits"].iloc[0], dtype=np.uint8)
-        pos = _positions(cand["url_hash"].to_numpy().astype(np.uint64), nbits)
-        hit = (arr[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
-        return cand.assign(might_contain=hit.all(axis=1))
+        def check(cand: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
+            if len(cand) == 0:
+                return cand.assign(might_contain=pd.Series([], dtype=bool))
+            if len(blm) == 0:
+                return cand.assign(might_contain=False)
+            nbits = int(blm["nbits"].iloc[0])
+            arr = np.frombuffer(blm["bits"].iloc[0], dtype=np.uint8)
+            pos = _positions(cand["url_hash"].to_numpy().astype(np.uint64), nbits)
+            hit = (arr[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
+            return cand.assign(might_contain=hit.all(axis=1))
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-    checked = (
-        candidates.groupBy("bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(check, schema + ", might_contain boolean")
-    )
+        schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
+        )
+        checked = (
+            candidates.groupBy("bucket")
+            .cogroup(bloom.groupBy("bucket"))
+            .applyInPandas(check, schema + ", might_contain boolean")
+        )
     definite_new = checked.filter(~F.col("might_contain")).drop("might_contain")
     maybe = checked.filter(F.col("might_contain")).drop("might_contain")
     confirmed_new = maybe.join(_seen_keys(seen), "url_hash", "left_anti")

@@ -267,6 +267,57 @@ def test_cli_ttl_store_lineage_and_resume(spark, tmp_path, capsys):
     assert out2["start_iteration"] == 3 and out2["completed_iterations"] == 4
 
 
+def test_cli_resumes_store_recorded_with_cuckoo_filter(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """Stores written while the seen filter was a choice record
+    ``"seen_filter"`` in cli_meta.json, and a cuckoo store also holds a
+    cuckoo-format ``seen_filter`` table. --resume and lineage ignore
+    both: the resumed loop builds its Bloom filter from the frontier
+    before first use, so the resumed crawl equals an uninterrupted one."""
+    from mklab_focused_crawler_spark.operators import crawl as crawl_mod
+    from mklab_focused_crawler_spark.operators.crawl import CrawlLoop
+    from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
+
+    old, ref = str(tmp_path / "old"), str(tmp_path / "ref")
+    base = ["--synthetic-pages", "300", "--hosts", "20", "--seed-count", "10"]
+    main(["crawl", "--root", old, *base, "--iterations", "2"])
+    capsys.readouterr()
+    # the older on-disk layout: the meta names the filter, and the
+    # cuckoo table (one 4-slot x 16-bit filter per bucket) sits beside
+    # the crawl tables
+    meta_path = os.path.join(old, "cli_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "seen_filter": "cuckoo"}, f)
+    SnapshotTable(old, "seen_filter").overwrite(
+        spark.createDataFrame(
+            [(b, 8, 0, bytes(64)) for b in range(crawl_mod.N_BUCKETS_DEFAULT)],
+            "bucket int, m long, n_keys long, slots binary",
+        )
+    )
+
+    # the resumed iteration runs the cogroup regime, the one that
+    # probes a filter table on disk
+    monkeypatch.setattr(crawl_mod, "BROADCAST_ANTI_MAX_KEYS", -1)
+    monkeypatch.setattr(crawl_mod, "BROADCAST_BLOOM_MAX_BYTES", 0)
+    main(["crawl", "--root", old, *base, "--iterations", "1", "--resume"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["start_iteration"] == 2 and out["completed_iterations"] == 3
+
+    main(["lineage", "--root", old])
+    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
+    assert {r["table"] for r in rows} >= {"frontier", "documents"}
+
+    main(["crawl", "--root", ref, *base, "--iterations", "3"])
+    a, b = CrawlLoop(spark, old), CrawlLoop(spark, ref)
+    assert a.crawl_log().collect() == b.crawl_log().collect()
+    assert sorted(r["canonical_url"] for r in a.seen_df().collect()) == sorted(
+        r["canonical_url"] for r in b.seen_df().collect()
+    )
+
+
 def test_cli_bucketed_pages_table(spark, tmp_path, capsys):
     """--fetch-join bucketed goes through a catalog table (the only
     form carrying bucket metadata); a bare --pages path is rejected

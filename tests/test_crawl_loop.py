@@ -83,7 +83,6 @@ def test_crawl_parity_with_incremental_bloom(spark, tmp_path, monkeypatch):
     from mklab_focused_crawler_spark.operators import crawl as crawl_mod
 
     monkeypatch.setattr(crawl_mod, "BROADCAST_ANTI_MAX_KEYS", -1)
-    monkeypatch.setattr(crawl_mod, "FILTER_INCREMENTAL_MIN_KEYS", 0)
     monkeypatch.setattr(crawl_mod, "BROADCAST_BLOOM_MAX_BYTES", 0)
     pages, robots, seeds = _setup(spark)
     sim = _simulate(spark, pages, robots, seeds, max_iters=3)
@@ -109,6 +108,9 @@ def test_crawl_parity_with_broadcast_bloom(spark, tmp_path, monkeypatch):
     pages, robots, seeds = _setup(spark)
     sim = _simulate(spark, pages, robots, seeds, max_iters=3)
     loop, _ = _run_loop(spark, tmp_path / "bb", pages, robots, seeds, iters=3)
+    # init and every iteration ran in the driver-bloom regime: the
+    # filter lives on the driver, so no filter table was ever written
+    assert not loop.filter_table.exists()
     log = loop.crawl_log().collect()
     got = [(r["iteration"], r["doc_id"], r["source_url"], r["crawl_order"]) for r in log]
     assert got == sim["order"]

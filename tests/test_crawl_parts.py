@@ -95,9 +95,7 @@ def test_bloom_incremental_merge_no_false_negatives(spark):
     survivors = seen_mod.filter_unseen(all_keys, empty_seen, merged)
     # all 400 pass the exact anti-join (seen empty), but none may have
     # skipped the bloom as a definite miss — check via the broadcast path
-    hits = seen_mod.filter_unseen(
-        all_keys, all_keys, merged, broadcast_bloom=True
-    )
+    hits = seen_mod.filter_unseen(all_keys, all_keys, seen_mod.collect_bloom(merged))
     assert hits.count() == 0  # every key bloom-hits and is confirmed seen
     assert survivors.count() == 400
 

@@ -13,7 +13,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mklab_focused_crawler_spark.operators import crawl as crawl_mod
 from mklab_focused_crawler_spark.operators.crawl import CrawlLoop
+from mklab_focused_crawler_spark.sources.synthetic_web import (
+    generate_pages,
+    generate_robots,
+    generate_seeds,
+)
 
 
 HTML = (
@@ -47,20 +53,23 @@ def _two_page_web(spark):
     return pages, robots, seeds
 
 
-@pytest.mark.parametrize("filt", ["bloom", "cuckoo"])
-def test_ttl_reclaim_updates_not_duplicates(spark, tmp_path, filt, monkeypatch):
-    """A TTL-expired URL is re-claimed and its document row is updated
-    in place (merge), not appended twice."""
-    if filt == "cuckoo":
-        # force the incremental maintenance path so insert_keys +
-        # delete_keys (physical eviction) actually run
-        from mklab_focused_crawler_spark.operators import crawl as crawl_mod
+# each seen-gate size regime, forced by shrinking the thresholds: the
+# two-page web otherwise stays in the broadcast anti-join regime
+_REGIMES = {
+    "anti_join": {},
+    "bloom": {"BROADCAST_ANTI_MAX_KEYS": -1},
+    "cogroup": {"BROADCAST_ANTI_MAX_KEYS": -1, "BROADCAST_BLOOM_MAX_BYTES": 0},
+}
 
-        monkeypatch.setattr(crawl_mod, "FILTER_INCREMENTAL_MIN_KEYS", 0)
+
+@pytest.mark.parametrize("regime", list(_REGIMES))
+def test_ttl_reclaim_updates_not_duplicates(spark, tmp_path, regime, monkeypatch):
+    """A TTL-expired URL is re-claimed and its document row is updated
+    in place (merge), not appended twice — in every seen-gate regime."""
+    for name, value in _REGIMES[regime].items():
+        monkeypatch.setattr(crawl_mod, name, value)
     pages, robots, seeds = _two_page_web(spark)
-    loop = CrawlLoop(
-        spark, str(tmp_path / filt), seen_filter=filt, ttl_iterations=2
-    )
+    loop = CrawlLoop(spark, str(tmp_path / regime), ttl_iterations=2)
     loop.init(seeds, pages.select("url", "shares", "pub_ms"))
     stats = loop.run(pages, robots, max_iterations=4)
 
@@ -124,3 +133,52 @@ def test_ttl_zero_without_flag_unchanged(spark, tmp_path):
         "http://a.test/p/1",
         "http://b.test/p/1",
     ]
+
+
+def test_ttl_bloom_rebuilds_before_outgrowing_its_sizing(
+    spark, tmp_path, monkeypatch
+):
+    """Under TTL a rebuild sizes the filter for the LIVE seen keys only,
+    while every newly scheduled key is merged into it. Each probe of a
+    crawl held in the driver-bloom regime must see a filter holding at
+    most twice the keys it was built for; past that its false-positive
+    rate climbs toward 1 and the gate silently stops pruning. Counted
+    from outside the loop: keys handed to each build, and keys merged
+    since."""
+    monkeypatch.setattr(crawl_mod, "BROADCAST_ANTI_MAX_KEYS", -1)
+    occ = {"built": None, "merged": 0}
+    probes = []
+    build, merge, probe = (
+        crawl_mod.build_bloom,
+        crawl_mod.merge_bloom_driver,
+        crawl_mod.filter_unseen,
+    )
+
+    def counting_build(seen):
+        occ.update(built=seen.count(), merged=0)
+        return build(seen)
+
+    def counting_merge(table, rows):
+        occ["merged"] += rows.num_rows
+        merge(table, rows)
+
+    def recording_probe(cand, seen, bloom, *args, **kw):
+        if bloom is not None:
+            probes.append(dict(occ))
+        return probe(cand, seen, bloom, *args, **kw)
+
+    monkeypatch.setattr(crawl_mod, "build_bloom", counting_build)
+    monkeypatch.setattr(crawl_mod, "merge_bloom_driver", counting_merge)
+    monkeypatch.setattr(crawl_mod, "filter_unseen", recording_probe)
+
+    pages = generate_pages(spark, 250).persist()
+    loop = CrawlLoop(spark, str(tmp_path / "occ"), ttl_iterations=2)
+    loop.init(generate_seeds(spark, 250, 10), pages.select("url", "shares", "pub_ms"))
+    stats = loop.run(pages, generate_robots(spark), max_iterations=9)
+    loop.close()
+    pages.unpersist()
+
+    assert len(probes) == len(stats) >= 5 and not any(s.get("done") for s in stats)
+    assert all(p["built"] is not None for p in probes)
+    held = [(p["built"] + p["merged"], p["built"]) for p in probes]
+    assert all(h <= 2 * b for h, b in held), held
