@@ -177,6 +177,44 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup(corpus)
 
 
+class _CorpusCache:
+    """Frames built once per corpus and shared by a session's queries.
+    Key = (applicationId, ``dataset_key`` of the corpus's documents
+    file), so a rewritten corpus rebuilds; capped at 2 corpora (the
+    fuzz layer streams many tiny corpora through these queries). An
+    evicted or cleared entry unpersists every DataFrame it holds."""
+
+    def __init__(self) -> None:
+        self._entries: dict[tuple, dict] = {}
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, spark: SparkSession, sf_dir: str, build: Callable[[], dict]) -> dict:
+        path = f"{sf_dir.rstrip('/')}/documents.parquet"
+        key = (spark.sparkContext.applicationId,) + dataset_key(path)
+        if key not in self._entries:
+            while len(self._entries) >= 2:
+                self._release(self._entries.pop(next(iter(self._entries))))
+            self._entries[key] = build()
+        return self._entries[key]
+
+    def clear(self) -> None:
+        for entry in self._entries.values():
+            self._release(entry)
+        self._entries.clear()
+
+    @staticmethod
+    def _release(entry: dict) -> None:
+        for v in entry.values():
+            for f in v if isinstance(v, list) else [v]:
+                if isinstance(f, DataFrame):
+                    try:
+                        f.unpersist()
+                    except Exception:
+                        pass  # owning session already stopped (test teardown)
+
+
 # The LSH-family queries (pairs, clusters, corpus filter) are three
 # consumers of ONE canonical artifact set — the exact-collapsed
 # signature table plus verified canonical pairs. A production dedup
@@ -184,41 +222,21 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from it (the reference's external visual index plays exactly this
 # role, VisualIndexerBolt.java:167), so the driver session shares one
 # build per corpus — same offline-artifact semantics as the trained
-# IVF codebook below. Cache key = corpus file identity; capped at 2
-# corpora with unpersist-on-evict (the fuzz layer streams many tiny
-# corpora through these queries). Each consumer still runs its OWN
-# stage off the artifacts: pair expansion, component labeling, or the
-# corpus keep-join.
-_LSH_CACHE: dict[tuple, dict] = {}
-
-
-def _release_lsh_entry(entry: dict) -> None:
-    frames = [entry["cpairs"], entry["sigs"], entry["hot"]]
-    if entry.get("clusters") is not None:
-        frames.append(entry["clusters"])  # persisted in the >1M-edge regime
-    for f in frames:
-        try:
-            f.unpersist()
-        except Exception:
-            pass  # owning session already stopped (test teardown)
+# IVF codebook below. Each consumer still runs its OWN stage off the
+# artifacts: pair expansion, component labeling, or the corpus
+# keep-join.
+_LSH_CACHE = _CorpusCache()
 
 
 def clear_lsh_cache() -> None:
     """Release every cached LSH artifact set. The bench harnesses call
     this before timed passes that must pay the full build (bench.py per
-    minhash pass; bench_sf1.py per LSH-family leg) — one helper so the
-    cache's frame inventory lives in exactly one place."""
-    for entry in _LSH_CACHE.values():
-        _release_lsh_entry(entry)
+    minhash pass; bench_sf1.py per LSH-family leg)."""
     _LSH_CACHE.clear()
 
 
 def _lsh_artifacts(spark: SparkSession, sf_dir: str) -> dict:
-    path = f"{sf_dir.rstrip('/')}/documents.parquet"
-    key = (spark.sparkContext.applicationId,) + dataset_key(path)
-    if key not in _LSH_CACHE:
-        while len(_LSH_CACHE) >= 2:
-            _release_lsh_entry(_LSH_CACHE.pop(next(iter(_LSH_CACHE))))
+    def build() -> dict:
         corpus = dedup.augment_corpus(load_table(spark, sf_dir, "documents"))
         cpairs, sigs, hot = dedup.lsh_canonical_pairs(corpus)
         cpairs, hot = cpairs.persist(), hot.persist()
@@ -226,13 +244,10 @@ def _lsh_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         # eager-caller contract: the artifact build counts and logs any
         # hot-bucket drops once for all consumers (never a silent cap)
         dedup.log_hot_drops(hot)
-        _LSH_CACHE[key] = {
-            "cpairs": cpairs,
-            "sigs": sigs,
-            "hot": hot,
-            "clusters": None,
-        }
-    return _LSH_CACHE[key]
+        # clusters: built on first use, persisted in the >1M-edge regime
+        return {"cpairs": cpairs, "sigs": sigs, "hot": hot, "clusters": None}
+
+    return _LSH_CACHE.get(spark, sf_dir, build)
 
 
 def _lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,36 +315,20 @@ def _q_ann_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- composed end-to-end pipeline (operators/pipeline.py) ----------------
 
 # One build per corpus (the pipeline materializes intermediate tables +
-# runs the eager LSH machinery); keyed like the LSH artifacts, evicted
-# with unpersist. bench.py clears this before every timed pipeline pass
-# so min-of-N can't hide the build cost (the LSH honesty rule).
-_PIPELINE_CACHE: dict[tuple, dict] = {}
+# runs the eager LSH machinery), cached like the LSH artifacts. bench.py
+# clears this before every timed pipeline pass so min-of-N can't hide
+# the build cost (the LSH honesty rule).
+_PIPELINE_CACHE = _CorpusCache()
 
 
 def clear_pipeline_cache() -> None:
-    for entry in _PIPELINE_CACHE.values():
-        for f in entry["frames"]:
-            try:
-                f.unpersist()
-            except Exception:
-                pass
     _PIPELINE_CACHE.clear()
 
 
 def _q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    path = f"{sf_dir.rstrip('/')}/documents.parquet"
-    key = (spark.sparkContext.applicationId,) + dataset_key(path)
-    if key not in _PIPELINE_CACHE:
-        while len(_PIPELINE_CACHE) >= 2:
-            k = next(iter(_PIPELINE_CACHE))
-            e = _PIPELINE_CACHE.pop(k)
-            for f in e["frames"]:
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
+    def build() -> dict:
         frames: list = []
         df = pipeline.pipeline_e2e(
             spark,
@@ -341,8 +340,9 @@ def _q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.basename(sf_dir.rstrip("/")),
             ),
         )
-        _PIPELINE_CACHE[key] = {"df": df, "frames": frames}
-    return _PIPELINE_CACHE[key]["df"]
+        return {"df": df, "frames": frames}
+
+    return _PIPELINE_CACHE.get(spark, sf_dir, build)["df"]
 
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

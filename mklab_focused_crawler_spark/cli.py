@@ -14,9 +14,10 @@ Two fetch modes:
 - **page-store mode** (``--pages``): fetch is the politeness-bounded
   claim-batch join against a parquet/Iceberg page store (columns
   ``url, html, mime, redirect_to, shares, pub_ms``) — batch
-  re-processing of an already-materialized web; ``--fetch-join
-  bucketed`` switches to the storage-partitioned join for a
-  url-bucketed table.
+  re-processing of an already-materialized web. ``--pages-table``
+  names a catalog table instead; when it is bucketed on url the join
+  is storage-partitioned (only a catalog table carries bucket
+  metadata).
 - **synthetic mode** (``--synthetic-pages``): the deterministic
   generated web with column-expression fetch (cost ∝ claimed URLs) —
   the scaling-protocol workload, usable as a smoke/benchmark job on
@@ -72,14 +73,11 @@ def _build_parser() -> argparse.ArgumentParser:
     c.add_argument(
         "--pages-table",
         default=None,
-        help="page-store CATALOG table name (required for --fetch-join "
-        "bucketed: only a catalog table carries bucket metadata)",
+        help="page-store CATALOG table name (a table bucketed on url gets "
+        "the storage-partitioned fetch join)",
     )
     c.add_argument("--robots", default=None, help="robots parquet path")
     c.add_argument("--seeds", default=None, help="seeds parquet path")
-    c.add_argument(
-        "--fetch-join", choices=["broadcast", "bucketed"], default="broadcast"
-    )
     # synthetic mode
     c.add_argument("--synthetic-pages", type=int, default=None)
     c.add_argument("--hosts", type=int, default=100)
@@ -179,11 +177,6 @@ def _run_crawl(args) -> dict:
         )
     if args.pages and args.pages_table:
         raise SystemExit("--pages and --pages-table are mutually exclusive")
-    if args.fetch_join == "bucketed" and not args.pages_table:
-        # a bare parquet path reads WITHOUT bucket metadata — the
-        # storage-partitioned join silently degrades to a full shuffle
-        # of the html-bearing web per iteration
-        raise SystemExit("--fetch-join bucketed needs --pages-table")
     if page_mode and not args.robots:
         raise SystemExit("--pages mode needs --robots")
     if page_mode and not (args.seeds or args.resume):
@@ -230,7 +223,7 @@ def _run_crawl(args) -> dict:
         robots = spark.read.parquet(args.robots)
         seeds = spark.read.parquet(args.seeds) if args.seeds else None
         meta = pages.select("url", "shares", "pub_ms")
-        loop = CrawlLoop(spark, args.root, fetch_join=args.fetch_join, **loop_kw)
+        loop = CrawlLoop(spark, args.root, **loop_kw)
         run_kw = {}
 
     start = 0

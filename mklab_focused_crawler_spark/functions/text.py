@@ -77,11 +77,6 @@ def remove_stopwords(tokens: Column) -> Column:
     return F.filter(tokens, lambda t: ~F.array_contains(stop, t))
 
 
-def remove_stopwords_sql(tokens_expr: str) -> str:
-    stoplist = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
-    return f"list_filter({tokens_expr}, t -> NOT list_contains({stoplist}, t))"
-
-
 def ngrams(tokens: Column, n: int) -> Column:
     """ShingleFilter equivalent: space-joined n-grams in order.
 

@@ -61,16 +61,18 @@ efficiency of the rewrite-everything round-1 loop:
   repartitioned by url once per run and cached; each iteration only
   shuffles the (small) new-URL side to meet it (shuffle-hash, no
   per-iteration sort of the big side).
-- **Fetch cost ∝ claims, never ∝ web.** Three transports: the
-  page-store equi-join (broadcast claim batch, or storage-partitioned
-  against a url-bucketed table), the injectable mapInPandas HTTP-shape
-  UDF, and the column-expression ``fetch_fn`` (synthetic web: each
-  claimed page regenerates from its URL inside the extraction codegen
-  stage). The join paths re-scan O(web) bytes per iteration — pure
-  memory traffic, and measured memory bandwidth on this box saturates
-  far below core count (6.6 GB/s at 2 cores, 10.5 at 8) — so the
-  scaling bench uses ``fetch_fn``: fetch+extract is then CPU-dense and
-  cache-resident, which is also the real crawler's cost shape.
+- **Fetch cost ∝ claims, never ∝ web.** Two fetch shapes: a function
+  of the claim batch (``fetch_fn``, or ``page_fetch`` over a page
+  store) and the injectable mapInPandas HTTP-shape UDF. The synthetic
+  web's ``fetch_fn`` regenerates each claimed page from its URL inside
+  the extraction codegen stage. The page-store join's shape follows
+  the page relation: storage-partitioned against a table bucketed on
+  url, a broadcast claim batch otherwise. It re-scans
+  O(web) bytes per iteration — pure memory traffic, and measured
+  memory bandwidth on this box saturates far below core count
+  (6.6 GB/s at 2 cores, 10.5 at 8) — so the scaling bench uses
+  ``fetch_fn``: fetch+extract is then CPU-dense and cache-resident,
+  which is also the real crawler's cost shape.
 - **One seen gate, three size regimes.** The seen-set size alone picks
   the regime: an exact broadcast anti-join up to
   BROADCAST_ANTI_MAX_KEYS; then a per-bucket Bloom filter held on the
@@ -109,7 +111,7 @@ from ..sources.synthetic_web import (
     generate_seeds,
 )
 from ..storage.snapshot import SnapshotTable
-from .extraction import extract_articles_native as extract_articles
+from .extraction import extract_articles
 from .frontier import claim_batch, expand_redirects
 from .seen import (
     BITS_PER_KEY,
@@ -223,6 +225,50 @@ def score_candidates(
     )
 
 
+def _bucketed_on_url(pages: DataFrame) -> bool:
+    """Whether ``pages`` scans one file relation bucketed on ``url``
+    alone, read from the analyzed plan's relation metadata — no Spark
+    job. Only a catalog table carries a bucket spec; a parquet path or
+    a generated frame never does."""
+    if pages.sparkSession.conf.get("spark.sql.sources.bucketing.enabled") != "true":
+        return False
+    leaves = pages._jdf.queryExecution().analyzed().collectLeaves()
+    leaf = leaves.head() if leaves.size() == 1 else None
+    if leaf is None or leaf.getClass().getSimpleName() != "LogicalRelation":
+        return False
+    rel = leaf.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return False
+    spec = rel.bucketSpec()
+    return spec.isDefined() and spec.get().bucketColumnNames().mkString(",") == "url"
+
+
+def page_fetch(pages: DataFrame):
+    """The page-store transport: a ``fetch_fn`` that INNER-joins the
+    expanded claim batch against ``pages`` on the expanded URL. Inner,
+    not left: a left join forces the page store to the build/shuffle
+    side — sort-merge-shuffling the whole web (html included) every
+    iteration; missing fetches fall out of the row-count arithmetic.
+
+    The join shape follows the page relation, decided once here:
+    - bucketed on url (the 10^10-page shape, a bucketed Iceberg/catalog
+      table): a storage-partitioned shuffle-hash join. The scan already
+      has the join's hash distribution, so only the claim batch (build
+      side) shuffles into the bucket layout and the web streams
+      bucket-by-bucket — no per-iteration driver-side broadcast build,
+      and the bucket count sets the extraction kernel's parallelism;
+    - anything else: the politeness-bounded claim batch (≤ hosts×quota
+      rows — small by construction) is broadcast against the scan."""
+    pages_sel = pages.select(
+        F.col("url").alias("expanded_url"), "mime", "html", "out_links"
+    )
+    if _bucketed_on_url(pages):
+        return lambda expanded: pages_sel.join(
+            expanded.hint("shuffle_hash"), "expanded_url"
+        )
+    return lambda expanded: expanded.hint("broadcast").join(pages_sel, "expanded_url")
+
+
 def _candidate_keys(urls_df: DataFrame, n_buckets: int) -> DataFrame:
     """url (+ ns/ph discovery-priority columns) → + canonical_url /
     url_hash / bucket."""
@@ -243,7 +289,6 @@ class CrawlLoop:
         window_ms: int = 1000,
         ttl_iterations: int | None = None,
         transport_factory=None,
-        fetch_join: str = "broadcast",
         fetch_fn=None,
         transport_redirects: int = 0,
     ):
@@ -262,16 +307,6 @@ class CrawlLoop:
         in the loop; the ≤300-length gate applies to the terminal URL
         post-fetch, mirroring the offline path's post-expansion gate.
 
-        ``fetch_join``: physical strategy for the page-store fetch join.
-        ``"broadcast"`` (default) broadcasts the politeness-bounded
-        claim batch against the page scan — right for ad-hoc page
-        frames. ``"bucketed"`` expects ``pages`` to be a scan of a
-        table bucketed on ``url`` and runs a storage-partitioned
-        shuffle-hash join instead: only the claim batch shuffles (into
-        the bucket layout), the web streams bucket-by-bucket in place,
-        and there is no per-iteration driver-side broadcast build. This
-        is the 10^10-page shape (bucketed Iceberg pages table).
-
         ``fetch_fn``: column-expression transport — a callable taking
         the expanded claim batch and returning it with (mime, html,
         out_links) attached, cost ∝ claimed rows (the faithful HTTP-cost
@@ -279,12 +314,12 @@ class CrawlLoop:
         deterministic bench web). Fetch misses = rows the fn drops.
         Mutually exclusive with ``transport_factory``; when set,
         ``run()`` takes an explicit redirect map and pages_meta and
-        ``pages`` may be None."""
-        assert fetch_join in ("broadcast", "bucketed")
+        ``pages`` may be None. With neither, fetch is ``page_fetch``
+        over ``run()``'s ``pages``, its join shape read from the page
+        relation's bucket metadata."""
         assert transport_factory is None or fetch_fn is None
         assert transport_redirects == 0 or transport_factory is not None
         self.transport_redirects = transport_redirects
-        self.fetch_join = fetch_join
         self.fetch_fn = fetch_fn
         self.spark = spark
         self.now_ms = now_ms
@@ -465,12 +500,15 @@ class CrawlLoop:
     # ------------------------------------------------------------------
     def run_iteration(
         self,
-        pages: DataFrame,
+        fetch,
         robots: DataFrame,
         redirects: DataFrame,
         iteration: int,
-        pages_meta: DataFrame | None = None,
+        pages_meta: DataFrame,
     ) -> dict:
+        """One super-step. ``fetch`` maps the expanded claim batch to
+        its fetched rows (``fetch_fn``, or ``page_fetch`` over the page
+        store); None with a ``transport_factory``."""
         t0 = time.perf_counter()
         timings: dict[str, float] = {}
 
@@ -488,9 +526,6 @@ class CrawlLoop:
             self._n_tombs = (
                 self.claims.read(self.spark).count() if self.claims.exists() else 0
             )
-        meta = pages_meta if pages_meta is not None else pages.select(
-            "url", "shares", "pub_ms"
-        )
 
         # 1. claim (politeness + robots + deterministic priority order).
         # Spread the claimed batch across the cluster: the per-host
@@ -520,12 +555,8 @@ class CrawlLoop:
                 "final_url", canonicalize_url("expanded_url")
             )
 
-        # 3. fetch. Default: INNER join of the claimed batch against
-        # the page store on the expanded URL. Inner, not left: a left
-        # join forces the page store to the build/shuffle side —
-        # sort-merge-shuffling the whole web (html included) every
-        # iteration; "missing" fetches fall out of the row-count
-        # arithmetic instead.
+        # 3. fetch: fetch_fn (or page_fetch's page-store join) over the
+        # claimed batch.
         # With a transport_factory, fetch is the mapInPandas UDF over
         # the claimed batch (per-host politeness inside the batch,
         # status/error columns) — the real-HTTP execution shape. Either
@@ -535,33 +566,12 @@ class CrawlLoop:
         # core scaling, and a transport must fetch each URL exactly
         # once per iteration.
         obs_batch = Observation()
-        if self.fetch_fn is not None:
-            # column-expression transport: (mime, html, out_links)
-            # regenerated/fetched per claimed row — O(claims), no page
-            # scan; generation fuses with the extraction kernel into
-            # one codegen stage (strings stay cache-resident)
-            fetched = self.fetch_fn(expanded)
-        elif self.transport_factory is None:
-            pages_sel = pages.select(
-                F.col("url").alias("expanded_url"), "mime", "html", "out_links"
-            )
-            if self.fetch_join == "bucketed":
-                # Storage-partitioned join: pages is bucketed on url,
-                # so the scan satisfies the join's hash distribution
-                # as-is; the claim batch (build side, shuffle_hash
-                # hint) shuffles into the bucket layout and the web
-                # streams bucket-by-bucket. No broadcast build (a
-                # per-iteration single-threaded driver cost), and the
-                # join output inherits the bucket count — which also
-                # sets the parallelism of the extraction kernel.
-                fetched = pages_sel.join(
-                    expanded.hint("shuffle_hash"), "expanded_url"
-                )
-            else:
-                # Broadcast the politeness-bounded claim batch
-                # (≤ hosts×quota rows — small by construction) against
-                # the page scan.
-                fetched = expanded.hint("broadcast").join(pages_sel, "expanded_url")
+        if fetch is not None:
+            # (mime, html, out_links) attached per claimed row. The
+            # synthetic fetch_fn is O(claims) with no page scan: its
+            # generation fuses with the extraction kernel into one
+            # codegen stage (strings stay cache-resident)
+            fetched = fetch(expanded)
         else:
             from .fetch import fetch_with_transport
 
@@ -763,7 +773,7 @@ class CrawlLoop:
         # generated class differ (and recompile) every iteration
         new_urls = (
             score_candidates(
-                dedup_first_seen(pruned).drop("ns", "ph"), meta, self.now_ms
+                dedup_first_seen(pruned).drop("ns", "ph"), pages_meta, self.now_ms
             )
             .observe(obs_sched, F.count(F.lit(1)).alias("n_new"))
             .persist()
@@ -925,15 +935,12 @@ class CrawlLoop:
             # the old generation, and every GC pause then stops all task
             # threads — measured as 29% of task time in GC and ZERO
             # 8→32-core scaling before this rework. The fetch join
-            # instead broadcasts the politeness-bounded claim batch
-            # (≤ hosts×quota rows — small by construction) against the
-            # columnar page-store scan, which is read-only, off-heap
-            # (parquet/Arrow page cache at rest) and embarrassingly
-            # parallel. At 10^10 scale the same plan is a storage-
-            # partitioned join against the bucketed Iceberg pages table.
-            # Only the narrow (url, shares, pub_ms) metadata projection
-            # is cached, pre-partitioned by url so the score join only
-            # shuffles the (small) new-URL side.
+            # (page_fetch) instead reads the columnar page-store scan,
+            # which is read-only, off-heap (parquet/Arrow page cache at
+            # rest) and embarrassingly parallel. Only the narrow (url,
+            # shares, pub_ms) metadata projection is cached,
+            # pre-partitioned by url so the score join only shuffles the
+            # (small) new-URL side.
             n_parts = int(
                 self.spark.conf.get("spark.sql.shuffle.partitions", "32")
             )
@@ -943,6 +950,11 @@ class CrawlLoop:
                 else pages.select("url", "shares", "pub_ms")
             )
             self._meta = meta_src.repartition(n_parts, "url").persist()
+        # the page-store join shape is read from the page relation's
+        # metadata once per run (page_fetch)
+        fetch = self.fetch_fn
+        if fetch is None and self.transport_factory is None:
+            fetch = page_fetch(pages)
         # AQE off for the super-steps: every adaptive shuffle becomes a
         # sequentially-materialized query stage — a separate job with a
         # driver barrier. Profiling showed ~30 jobs per iteration under
@@ -957,7 +969,7 @@ class CrawlLoop:
         try:
             stats = []
             for it in range(start_iteration, start_iteration + max_iterations):
-                s = self.run_iteration(pages, robots, redirects, it, self._meta)
+                s = self.run_iteration(fetch, robots, redirects, it, self._meta)
                 stats.append(s)
                 if s.get("done"):
                     break
@@ -1071,8 +1083,8 @@ def scaling_workload(
     ~6.6 GB/s with 2 cores busy but only ~10.5 GB/s with 8 (measured
     with a numpy memcpy sweep), so that term capped 2→8-core scaling
     at ~1.6× regardless of engine quality, while pure-CPU work scales
-    ~4.0×. The join paths (broadcast + storage-partitioned bucketed)
-    remain for batch re-processing and are plan-shape-tested; the
+    ~4.0×. The page-store join (``page_fetch``) remains for batch
+    re-processing and is plan-shape-tested; the
     transport parity with the materialized web is pinned by
     tests/test_crawl_parts.py::test_synthetic_fetch_parity."""
     import os

@@ -557,6 +557,8 @@ def jaccard_topk(corpus: DataFrame, k: int = JACCARD_TOPK) -> DataFrame:
     Ranking on the double a/b is cross-engine safe: IEEE division of
     identical integers is correctly rounded everywhere (unlike log/exp).
     """
+    from pyspark.sql import Window
+
     sh = (
         corpus.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .select(
@@ -566,6 +568,10 @@ def jaccard_topk(corpus: DataFrame, k: int = JACCARD_TOPK) -> DataFrame:
             ),
         )
         .select("doc_id", hash64(F.col("shingle")).alias("h"))
+        # never NULL (a string's hash); stated so that every consumer
+        # sees the same subtree below the window, whether or not a join
+        # on h infers the filter
+        .filter(F.col("h").isNotNull())
     )
     # corpus size as a broadcast 1-row join, not an eager .count() —
     # keeps the whole query one job. floor() (not int-cast/round) so the
@@ -574,13 +580,17 @@ def jaccard_topk(corpus: DataFrame, k: int = JACCARD_TOPK) -> DataFrame:
     max_df = F.greatest(
         F.floor(F.col("_n_docs") * F.lit(MAX_SHINGLE_DF_FRAC)).cast("int"), F.lit(1)
     )
-    rare = (
-        sh.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
+    # df as a window over h, not an aggregate joined back: the doc_id
+    # filters Catalyst infers for the consumers (the probe sample, the
+    # size joins) stop at the window, so the capped index, the probes
+    # and the set sizes all read ONE shared hash exchange of `sh` — one
+    # corpus scan where each consumer used to re-scan it
+    sh = (
+        sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
         .crossJoin(n_docs)
         .filter(F.col("df") <= max_df)
+        .select("doc_id", "h")
     )
-    sh = sh.join(rare.select("h"), "h")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
 
     probes = sh.filter(F.col("doc_id") % JACCARD_PROBE_MOD == 0).select(
@@ -601,8 +611,6 @@ def jaccard_topk(corpus: DataFrame, k: int = JACCARD_TOPK) -> DataFrame:
             / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("probe_id").orderBy(F.desc("jaccard"), F.asc("doc_id"))
     return (
         joined.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -690,10 +698,17 @@ def simhash_table(corpus: DataFrame) -> DataFrame:
     kernel's shape) should replace the aggregate plan is open: two
     prototype measurements disagree (PLANS.md "MinHash signatures: one
     kernel"). Token-less texts ("", punctuation only) get sh = 0; NULL texts get
-    no row."""
-    hh = corpus.select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("tok")
-    ).select("doc_id", hash64(F.col("tok")).alias("h"))
+    no row.
+
+    One scan: explode_outer gives a token-less text one row with a NULL
+    hash, which votes -1 on every bit (sh = 0). A separate empties
+    branch would put a second copy of the corpus under every consumer
+    (both sides of ``simhash_pairs``' self-join)."""
+    hh = (
+        corpus.filter(F.col("text").isNotNull())
+        .select("doc_id", F.explode_outer(tokenize(F.col("text"))).alias("tok"))
+        .select("doc_id", hash64(F.col("tok")).alias("h"))
+    )
     votes = hh.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -702,7 +717,7 @@ def simhash_table(corpus: DataFrame) -> DataFrame:
             for b in range(SIMHASH_BITS)
         ]
     )
-    sh = votes.select(
+    return votes.select(
         "doc_id",
         sum(
             [F.when(F.col(f"v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0)) for b in range(SIMHASH_BITS)],
@@ -711,16 +726,6 @@ def simhash_table(corpus: DataFrame) -> DataFrame:
         .cast("long")
         .alias("sh"),
     )
-    # token-less docs via a narrow corpus filter — a left-anti join
-    # against `sh` would re-run the explode→hash→vote subtree (the
-    # pruned copy isn't exchange-reusable). NULL text gets no row, as
-    # in the explode (explicit: size(NULL) is -1 with ANSI mode off)
-    empties = corpus.filter(
-        F.col("text").isNotNull() & (F.size(tokenize(F.col("text"))) <= 0)
-    ).select(
-        "doc_id", F.lit(0).cast("long").alias("sh")
-    )
-    return sh.unionByName(empties)
 
 
 def simhash_pairs(corpus: DataFrame) -> DataFrame:

@@ -140,22 +140,16 @@ def redirect_closure(redirects: DataFrame, max_hops: int = 4) -> DataFrame:
     return out
 
 
-def expand_redirects(
-    df: DataFrame, redirects: DataFrame, url_col: str = "url", max_hops: int = 4
-) -> DataFrame:
-    """Resolve redirect chains for a URL batch. ``redirects`` may be the
-    raw (src_url, dst_url) map (resolved to its ≤max_hops closure here)
-    or a precomputed ``redirect_closure`` frame (src_url, final_url) —
-    the crawl loop passes the latter, computed once per run. One
-    broadcast equi-join either way: the map is small by construction (a
-    low single-digit % of URLs 301), and the crawl loop runs with AQE
-    off so an unhinted plan would fall back to sort-merge. At live-crawl
-    scale redirects are followed by the fetch transport itself, not this
-    join."""
-    if "final_url" not in redirects.columns:
-        redirects = redirect_closure(redirects, max_hops)
+def expand_redirects(df: DataFrame, redirects: DataFrame) -> DataFrame:
+    """Resolve redirect chains for a URL batch against a precomputed
+    ``redirect_closure`` frame (src_url, final_url) — the crawl loop
+    computes it once per run. One broadcast equi-join: the map is small
+    by construction (a low single-digit % of URLs 301), and the crawl
+    loop runs with AQE off so an unhinted plan would fall back to
+    sort-merge. At live-crawl scale redirects are followed by the fetch
+    transport itself, not this join."""
     out = (
-        df.withColumn("expanded_url", F.col(url_col))
+        df.withColumn("expanded_url", F.col("url"))
         .join(
             broadcast(redirects.withColumnRenamed("src_url", "expanded_url")),
             "expanded_url",

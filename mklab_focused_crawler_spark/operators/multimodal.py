@@ -144,20 +144,6 @@ def filter_media(decoded: DataFrame, min_dim: int = 200, min_area: int = 40_000)
     )
 
 
-def frame_sample(decoded: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling plan: one row per sampled frame index —
-    a generator expression (posexplode over a sequence), the UDTF shape
-    a real frame extractor plugs into."""
-    vids = decoded.filter(F.col("media_type") == "video")
-    return vids.select(
-        "media_ref",
-        "n_frames",
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
 def media_pipeline_sql() -> str:
     """DuckDB twin of media_pipeline over the driver's flat documents
     table: re-derives the media spans (build_spans block math), the

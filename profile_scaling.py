@@ -2,8 +2,10 @@
 
 Usage: python profile_scaling.py <cores> [n_pages]
 Runs the same workload as bench_scaling.py at one level with
-spark.eventLog enabled, then prints stage wall-times, task counts,
-task-time sums and max-task share (skew/straggler evidence).
+spark.eventLog enabled, then prints, from ``perfbench.eventlog.parse``:
+stage wall-times, task counts, executor task-time and GC sums; jobs
+grouped by description with the driver gap before each; and the
+stages annotated with their job's description.
 """
 import json
 import os
@@ -45,89 +47,42 @@ print(json.dumps({k: v for k, v in out.items() if k != "iterations"}))
 spark.stop()
 time.sleep(2)
 
-# ---- parse event log ----
-stages = {}   # (stageId, attempt) -> dict
-jobs = {}
-for fn in os.listdir(log_dir):
-    p = os.path.join(log_dir, fn)
-    if not os.path.isfile(p):
-        continue
-    with open(p) as f:
-        for line in f:
-            try:
-                e = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            t = e.get("Event")
-            if t == "SparkListenerStageCompleted":
-                si = e["Stage Info"]
-                k = (si["Stage ID"], si["Stage Attempt ID"])
-                s = stages.setdefault(k, {"name": "?", "tasks": 0, "wall": 0,
-                                          "task_time": 0.0, "max_task": 0.0, "gc": 0.0})
-                s["name"] = si["Stage Name"].split("\n")[0][:90]
-                s["tasks"] = si["Number of Tasks"]
-                s["wall"] = (si.get("Completion Time", 0) - si.get("Submission Time", 0)) / 1e3
-            elif t == "SparkListenerTaskEnd":
-                k = (e["Stage ID"], e["Stage Attempt ID"])
-                ti = e.get("Task Info", {})
-                dur = (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3
-                s = stages.setdefault(k, {"name": "?", "tasks": 0, "wall": 0,
-                                          "task_time": 0.0, "max_task": 0.0, "gc": 0.0})
-                s["task_time"] += dur
-                s["max_task"] = max(s["max_task"], dur)
-                tm = e.get("Task Metrics") or {}
-                s["gc"] += tm.get("JVM GC Time", 0) / 1e3
+# ---- event-log analysis (perfbench/eventlog.py) ----
+from perfbench import eventlog
 
-tot_wall = sum(s["wall"] for s in stages.values())
-tot_task = sum(s["task_time"] for s in stages.values())
-print(f"\n== {len(stages)} stages, wall(sum)={tot_wall:.1f}s task_time(sum)={tot_task:.1f}s gc={sum(s['gc'] for s in stages.values()):.1f}s")
-print(f"{'wall':>7} {'ttime':>8} {'tasks':>5} {'max_t':>6} {'gc':>5}  name")
-for k, s in sorted(stages.items(), key=lambda kv: -kv[1]["wall"])[:30]:
-    print(f"{s['wall']:7.2f} {s['task_time']:8.1f} {s['tasks']:5d} {s['max_task']:6.1f} {s['gc']:5.1f}  {s['name']}")
+log = eventlog.parse(log_dir)
+stages = log.stages  # stage id -> eventlog.Stage
+stage_desc = {}  # stage id -> job description
+for job in log.jobs.values():
+    for sid in job.stage_ids:
+        stage_desc[sid] = job.desc or "(none)"
+
+
+def wall_s(s) -> float:
+    return (s.complete_ms - s.submit_ms) / 1e3
+
+
+tot_wall = sum(wall_s(s) for s in stages.values())
+tot_task = sum(s.executor_ms for s in stages.values()) / 1e3
+tot_gc = sum(s.gc_ms for s in stages.values()) / 1e3
+print(f"\n== {len(stages)} stages, wall(sum)={tot_wall:.1f}s task_time(sum)={tot_task:.1f}s gc={tot_gc:.1f}s")
+print(f"{'wall':>7} {'ttime':>8} {'tasks':>5} {'gc':>5}  name")
+for s in sorted(stages.values(), key=lambda s: -wall_s(s))[:30]:
+    print(f"{wall_s(s):7.2f} {s.executor_ms / 1e3:8.1f} {s.tasks:5d} {s.gc_ms / 1e3:5.1f}  {s.name[:90]}")
 
 # ---- job-description attribution: wall span + driver gap per action ----
-jobs = []
-stage_desc = {}  # stage id -> job description
-for fn in os.listdir(log_dir):
-    p = os.path.join(log_dir, fn)
-    if not os.path.isfile(p):
-        continue
-    pend = {}
-    with open(p) as f:
-        for line in f:
-            try:
-                e = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            t = e.get("Event")
-            if t == "SparkListenerJobStart":
-                desc = (e.get("Properties") or {}).get("spark.job.description", "")
-                pend[e["Job ID"]] = [e.get("Submission Time", 0), None, desc]
-                for si in e.get("Stage Infos", []):
-                    stage_desc[si["Stage ID"]] = desc or "(none)"
-            elif t == "SparkListenerJobEnd" and e["Job ID"] in pend:
-                pend[e["Job ID"]][1] = e.get("Completion Time", 0)
-    jobs += [j for j in pend.values() if j[1]]
-jobs.sort(key=lambda j: j[0])
-by_desc = {}
-prev_end = None
-for s, f, desc in jobs:
-    d = by_desc.setdefault(desc or "(none)", {"n": 0, "wall": 0.0, "gap": 0.0})
-    d["n"] += 1
-    d["wall"] += (f - s) / 1e3
-    if prev_end is not None:
-        d["gap"] += max(0, s - prev_end) / 1e3  # driver-side time before this job
-    prev_end = f
-print(f"\n== jobs by description ({len(jobs)} jobs): wall=in-job, gap=driver time before job")
+by_desc = log.by_description()
+n_jobs = sum(d["jobs"] for d in by_desc.values())
+print(f"\n== jobs by description ({n_jobs} jobs): wall=in-job, gap=driver time before job")
 print(f"{'n':>4} {'wall':>8} {'gap':>8}  description")
-for desc, d in sorted(by_desc.items(), key=lambda kv: -(kv[1]['wall'] + kv[1]['gap'])):
-    print(f"{d['n']:4d} {d['wall']:8.2f} {d['gap']:8.2f}  {desc}")
+for desc, d in sorted(by_desc.items(), key=lambda kv: -(kv[1]["wall_s"] + kv[1]["gap_s"])):
+    print(f"{d['jobs']:4d} {d['wall_s']:8.2f} {d['gap_s']:8.2f}  {desc}")
 
 print("\n== stages annotated with their job description (top 40 by wall)")
-print(f"{'wall':>7} {'ttime':>8} {'tasks':>5} {'max_t':>6} {'gc':>5}  desc / stage")
-for (sid, _), s in sorted(stages.items(), key=lambda kv: -kv[1]["wall"])[:40]:
+print(f"{'wall':>7} {'ttime':>8} {'tasks':>5} {'gc':>5}  desc / stage")
+for s in sorted(stages.values(), key=lambda s: -wall_s(s))[:40]:
     print(
-        f"{s['wall']:7.2f} {s['task_time']:8.1f} {s['tasks']:5d} "
-        f"{s['max_task']:6.1f} {s['gc']:5.1f}  "
-        f"[{stage_desc.get(sid, '?')}] {s['name'][:70]}"
+        f"{wall_s(s):7.2f} {s.executor_ms / 1e3:8.1f} {s.tasks:5d} "
+        f"{s.gc_ms / 1e3:5.1f}  "
+        f"[{stage_desc.get(s.stage_id, '?')}] {s.name[:70]}"
     )

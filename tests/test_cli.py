@@ -319,19 +319,14 @@ def test_cli_resumes_store_recorded_with_cuckoo_filter(
 
 
 def test_cli_bucketed_pages_table(spark, tmp_path, capsys):
-    """--fetch-join bucketed goes through a catalog table (the only
-    form carrying bucket metadata); a bare --pages path is rejected
-    up front instead of silently degrading to a full-web shuffle."""
+    """--pages-table runs the crawl over a catalog table (the only form
+    carrying bucket metadata); a url-bucketed table gets the
+    storage-partitioned fetch join with no flag."""
     from mklab_focused_crawler_spark.sources.synthetic_web import (
         generate_pages,
         generate_robots,
         generate_seeds,
     )
-
-    with pytest.raises(SystemExit, match="pages-table"):
-        main(["crawl", "--root", str(tmp_path / "x"), "--pages", "p.parquet",
-              "--robots", "r.parquet", "--seeds", "s.parquet",
-              "--fetch-join", "bucketed"])
 
     (
         generate_pages(spark, 250)
@@ -357,8 +352,6 @@ def test_cli_bucketed_pages_table(spark, tmp_path, capsys):
                 robots_p,
                 "--seeds",
                 seeds_p,
-                "--fetch-join",
-                "bucketed",
                 "--iterations",
                 "2",
             ]

@@ -3,16 +3,12 @@ span extraction parity vs the independent reference extractor."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mklab_focused_crawler_spark.operators import seen as seen_mod
-from mklab_focused_crawler_spark.operators.extraction import (
-    extract_articles,
-    extract_articles_native,
-)
+from mklab_focused_crawler_spark.operators.extraction import extract_articles
 from mklab_focused_crawler_spark.sources.synthetic_web import (
     generate_pages,
     generate_robots,
@@ -251,13 +247,12 @@ def test_merge_bloom_driver_matches_build_one():
 
 
 # --------------------------- extraction ------------------------------
-@pytest.mark.parametrize("impl", [extract_articles, extract_articles_native])
-def test_extraction_matches_reference(spark, impl):
+def test_extraction_matches_reference(spark):
     pages = generate_pages(spark, 120).filter(F.col("mime") == "text/html")
     rows = {r["url"]: r["html"] for r in pages.collect()}
     got = {
         r["doc_id"]: r
-        for r in impl(pages, "url", "html").collect()
+        for r in extract_articles(pages, "url", "html").collect()
     }
     assert set(got) == set(rows)
     checked_media = 0
@@ -279,8 +274,7 @@ def test_extraction_matches_reference(spark, impl):
     assert checked_media > 0  # fixture actually exercises media spans
 
 
-@pytest.mark.parametrize("impl", [extract_articles, extract_articles_native])
-def test_extraction_edge_cases(spark, impl):
+def test_extraction_edge_cases(spark):
     cases = [
         ("empty", ""),
         ("no_blocks", "<html><body>just text no block tags at all here</body></html>"),
@@ -292,7 +286,7 @@ def test_extraction_edge_cases(spark, impl):
         ),
     ]
     df = spark.createDataFrame(cases, "url string, html string")
-    got = {r["doc_id"]: r for r in impl(df, "url", "html").collect()}
+    got = {r["doc_id"]: r for r in extract_articles(df, "url", "html").collect()}
     for name, html in cases:
         want = ref_extract(html)
         g = got[name]
@@ -328,24 +322,22 @@ _FRAG = st.sampled_from(
 @settings(max_examples=8, deadline=None)
 @given(frags=st.lists(_FRAG, min_size=0, max_size=25))
 def test_extraction_fuzz_parity(spark, frags):
-    """Both kernels must match the independent Python-re extractor on
+    """The kernel must match the independent Python-re extractor on
     adversarial HTML (same per-row invariant as the golden test)."""
     html = "".join(frags)
     df = spark.createDataFrame([("d", html)], "url string, html string")
     want = ref_extract(html)
-    for impl in (extract_articles, extract_articles_native):
-        g = impl(df, "url", "html").collect()[0]
-        assert g["title"] == want["title"]
-        assert g["is_article"] == want["is_article"]
-        got_spans = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in g["spans"]
-        ]
-        want_spans = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in want["spans"]
-        ]
-        assert got_spans == want_spans
-        assert list(g["media_ids"]) == want["media_ids"]
+    g = extract_articles(df, "url", "html").collect()[0]
+    assert g["title"] == want["title"]
+    assert g["is_article"] == want["is_article"]
+    got_spans = [
+        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in g["spans"]
+    ]
+    want_spans = [
+        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in want["spans"]
+    ]
+    assert got_spans == want_spans
+    assert list(g["media_ids"]) == want["media_ids"]
 
 
 def test_merge_if_absent_users(spark, tmp_path):

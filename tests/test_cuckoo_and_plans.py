@@ -43,19 +43,45 @@ def test_ngram_ops_tokenize_once_per_row(spark, op):
     assert max(per_node) == 1, plan
 
 
-def test_fetch_join_broadcasts_claimed_side(spark):
-    """The crawl fetch join must broadcast the small claimed batch, not
-    shuffle the page store (the 10^10-scale disaster mode)."""
+@pytest.mark.parametrize("name, max_scans", [("jaccard_topk", 6), ("simhash_pairs", 3)])
+def test_dedup_queries_share_one_corpus_scan(spark, name, max_scans):
+    """The augmented corpus is a 3-scan union; every consumer inside
+    the query must read it through one shared exchange instead of
+    re-planning its own copy. jaccard_topk scans it twice (the shingle
+    index and the n_docs count), simhash_pairs once. Counted in the
+    physical plan with AQE off, after exchange reuse: the plan AQE's
+    final plan also shows (each consumer's own copy gave 15 and 9)."""
+    import __spark_entry__ as m
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = m.queries()[name](spark, SF01_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert plan.count("FileScan parquet") <= max_scans, plan
+
+
+def test_fetch_join_broadcasts_claimed_side(spark, tmp_path):
+    """The crawl loop's page-store fetch over a parquet path (no bucket
+    metadata) must broadcast the small claimed batch, not shuffle the
+    page store (the 10^10-scale disaster mode)."""
+    from mklab_focused_crawler_spark.operators.crawl import page_fetch
     from mklab_focused_crawler_spark.sources.synthetic_web import generate_pages
 
-    pages = generate_pages(spark, 2000)
+    generate_pages(spark, 2000).write.parquet(str(tmp_path / "web"))
+    pages = spark.read.parquet(str(tmp_path / "web"))
     claimed = pages.select("url").limit(50).withColumnRenamed("url", "expanded_url")
-    joined = claimed.join(
-        pages.select(F.col("url").alias("expanded_url"), "mime", "html"),
-        "expanded_url",
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastQueryStage" in plan
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # as in CrawlLoop.run
+    try:
+        fetched = page_fetch(pages)(claimed)
+        plan = fetched._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert "BroadcastHashJoin" in plan
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_determinism_across_shuffle_parallelism(spark):
@@ -135,14 +161,16 @@ def test_gemm_topk_matches_bruteforce_any_partitioning(spark):
 
 
 def test_bucketed_fetch_join_is_storage_partitioned(spark, tmp_path):
-    """fetch_join="bucketed" (the 10^10-page shape): the web scan side
-    must reach the shuffled-hash fetch join WITHOUT an exchange — the
-    bucketed layout satisfies the join's hash distribution — and the
-    web must never be broadcast-built. Only the claim batch shuffles."""
+    """The crawl loop's page-store fetch over a table bucketed on url
+    (the 10^10-page shape): the web scan side must reach the
+    shuffled-hash fetch join WITHOUT an exchange — the bucketed layout
+    satisfies the join's hash distribution — and the web must never be
+    broadcast-built. Only the claim batch shuffles."""
+    from mklab_focused_crawler_spark.operators.crawl import page_fetch
     from mklab_focused_crawler_spark.sources.synthetic_web import generate_pages
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # as in CrawlLoop.run
     try:
         (
             generate_pages(spark, 500)
@@ -156,10 +184,8 @@ def test_bucketed_fetch_join_is_storage_partitioned(spark, tmp_path):
         claimed = (
             pages.select("url").limit(50).withColumnRenamed("url", "expanded_url")
         )
-        joined = pages.select(
-            F.col("url").alias("expanded_url"), "mime", "html"
-        ).join(claimed.hint("shuffle_hash"), "expanded_url")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        fetched = page_fetch(pages)(claimed)
+        plan = fetched._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan
         assert "Broadcast" not in plan
         # exactly one shuffle: the claim side into the bucket layout

@@ -47,7 +47,7 @@ from mklab_focused_crawler_spark.operators.crawl import (
     BROADCAST_ANTI_MAX_KEYS,
     CrawlLoop,
 )
-from mklab_focused_crawler_spark.operators.extraction import extract_articles_native
+from mklab_focused_crawler_spark.operators.extraction import extract_articles
 from mklab_focused_crawler_spark.sources.synthetic_web import (
     generate_meta,
     generate_pages,
@@ -196,8 +196,8 @@ def test_expression_cache_self_union_and_rebuild(spark, monkeypatch):
     """Cached trees are un-aliased, so two outputs built from them never
     share an output attribute: a self-union of the kernel over two
     inputs equals the two outputs computed alone."""
-    a = extract_articles_native(_html_frame(spark, r"/page/[0-9]$"))
-    b = extract_articles_native(_html_frame(spark, r"/page/[0-9]{2}$"))
+    a = extract_articles(_html_frame(spark, r"/page/[0-9]$"))
+    b = extract_articles(_html_frame(spark, r"/page/[0-9]{2}$"))
     alone_a, alone_b = a.collect(), b.collect()
     assert alone_a and alone_b
     union = a.unionByName(b).collect()
