@@ -580,31 +580,32 @@ def jaccard_topk(corpus: DataFrame, k: int = JACCARD_TOPK) -> DataFrame:
     max_df = F.greatest(
         F.floor(F.col("_n_docs") * F.lit(MAX_SHINGLE_DF_FRAC)).cast("int"), F.lit(1)
     )
-    # df as a window over h, not an aggregate joined back: the doc_id
-    # filters Catalyst infers for the consumers (the probe sample, the
-    # size joins) stop at the window, so the capped index, the probes
-    # and the set sizes all read ONE shared hash exchange of `sh` — one
-    # corpus scan where each consumer used to re-scan it
+    # df as a window over h, not an aggregate joined back, and each
+    # doc's capped set size as a window over doc_id, not an aggregate
+    # joined to both sides: the size window's exchange sits directly
+    # above the df window and both join sides read it (the second a
+    # reused exchange), so the corpus is scanned and the df window runs
+    # once. The probe side picks its rows with explode_outer, which
+    # infers no filter: a probe filter would sink below that exchange on
+    # one side only and split it. A null h never joins.
     sh = (
         sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
         .crossJoin(n_docs)
         .filter(F.col("df") <= max_df)
         .select("doc_id", "h")
+        .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-
-    probes = sh.filter(F.col("doc_id") % JACCARD_PROBE_MOD == 0).select(
-        F.col("doc_id").alias("probe_id"), "h"
+    probe_h = F.explode_outer(
+        F.when(F.col("doc_id") % JACCARD_PROBE_MOD == 0, F.array("h"))
     )
-    inter = (
-        probes.join(sh, "h")
-        .filter(F.col("doc_id") != F.col("probe_id"))
-        .groupBy("probe_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    probes = sh.select(
+        F.col("doc_id").alias("probe_id"), F.col("sz").alias("sz_a"), probe_h.alias("h")
     )
     joined = (
-        inter.join(sizes.withColumnRenamed("doc_id", "probe_id").withColumnRenamed("sz", "sz_a"), "probe_id")
-        .join(sizes.withColumnRenamed("sz", "sz_b"), "doc_id")
+        probes.join(sh.withColumnRenamed("sz", "sz_b"), "h")
+        .filter(F.col("doc_id") != F.col("probe_id"))
+        .groupBy("probe_id", "doc_id", "sz_a", "sz_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
         .withColumn(
             "jaccard",
             F.col("inter").cast("double")
@@ -820,11 +821,10 @@ def log_hot_drops(hot: DataFrame) -> int:
     return r["n"]
 
 
-# Clustering regime switch: up to this many edges the component graph
-# is collected to the driver and labelled by union_find_labels; above it
-# min_label_propagation runs on the executors (batch
-# clusters_from_canonical, and the streaming clusters op's default
-# driver_edge_limit). The driver path is still the faster one at 10^6
+# Clustering regime switch of batch clusters_from_canonical: up to this
+# many edges the component graph is collected to the driver and
+# labelled by union_find_labels; above it min_label_propagation runs on
+# the executors. The driver path is still the faster one at 10^6
 # edges (PLANS.md "MinHash signatures: one kernel"); the limit bounds
 # the driver's collected graph, not a measured speed crossover.
 DRIVER_EDGE_LIMIT = 1_000_000
@@ -835,7 +835,8 @@ def union_find_labels(edges) -> list[tuple[int, int]]:
     labels (path-halving; union by min id). ``edges`` iterates (a, b)
     pairs; returns sorted (doc_id, cluster_id) rows for every vertex
     that appears in an edge. Shared by the batch ≤1M-edge regime and
-    the streaming clusters op so the label rule can't diverge."""
+    the streaming clusters op (which folds each batch's graph of stored
+    labels) so the label rule can't diverge."""
     parent: dict = {}
 
     def find(x):
@@ -947,8 +948,7 @@ def min_label_propagation(
     """Distributed connected components by min-label propagation WITH
     pointer-doubling over an (a, b) edge frame → (doc_id, cluster_id),
     cluster_id = min(doc_id) of the component. No driver-side graph.
-    The >1M-edge regime of :func:`duplicate_clusters`, shared with the
-    streaming clusters op's fallback so the two paths can't diverge.
+    The >1M-edge regime of :func:`duplicate_clusters`.
 
     Each round is (1) neighbor-min — every vertex takes the min label
     over its neighbors — then (2) a SHORTCUT join: label(v) :=

@@ -33,12 +33,15 @@ from __future__ import annotations
 
 import hashlib
 import itertools
+import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.exprcache import session_expr
+
+_LOG = logging.getLogger(__name__)
 
 SCALE = 1000  # quantization: q = round(x * SCALE)
 N_PLANES = 8  # LSH: 2^8 = 256 buckets
@@ -592,8 +595,19 @@ def derive_k_lists(n_corpus: int) -> int:
     """List count from the exact corpus count: n/TARGET_LIST_SIZE
     clamped to [K_LISTS, K_LISTS_CAP]. Pure integer arithmetic on the
     same exact count in both training paths (df / parquet twin), so the
-    derived k — like the sample modulus — agrees by construction."""
-    return min(K_LISTS_CAP, max(K_LISTS, n_corpus // TARGET_LIST_SIZE))
+    derived k — like the sample modulus — agrees by construction. The
+    ceiling is not silent: clamping logs one WARNING, since every list
+    then holds more than TARGET_LIST_SIZE vectors on average."""
+    want = max(K_LISTS, n_corpus // TARGET_LIST_SIZE)
+    if want > K_LISTS_CAP:
+        _LOG.warning(
+            "IVF list count clamped: corpus of %d vectors wants %d lists, "
+            "using %d",
+            n_corpus,
+            want,
+            K_LISTS_CAP,
+        )
+    return min(K_LISTS_CAP, want)
 
 
 def train_sample_mod(

@@ -215,6 +215,83 @@ def test_cli_stream_vocab_and_quota(spark, tmp_path, capsys):
     assert kept == {(1, "s"), (2, "s"), (3, "t")}
 
 
+def test_cli_stream_clusters_three_drains_match_batch(spark, tmp_path, capsys):
+    """``stream --op clusters`` run three times, one new parquet file per
+    run (each run is a fresh process-equivalent call over the same
+    store): the final clusters table equals batch duplicate_clusters
+    over the union of the files. The docs hold an exact duplicate and a
+    near duplicate across files, a one-token duplicate (no shingles, so
+    only the exact-group edge links it) and a smallest id that arrives
+    last."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mklab_focused_crawler_spark.operators.dedup import duplicate_clusters
+
+    def words(stem, n=30):
+        return " ".join(f"{stem}{i}" for i in range(n))
+
+    files = [
+        [
+            (10, words("apple")),
+            (11, words("cherry")),
+            (12, "solo"),
+            (13, words("kiwi")),
+        ],
+        [
+            (20, words("apple")),  # exact duplicate of 10
+            (21, words("cherry", 29) + " plum"),  # near duplicate of 11
+            (22, words("lemon")),
+            (23, "solo"),
+        ],
+        [
+            (1, words("kiwi")),  # smallest id, duplicates 13
+            (30, words("apple", 29) + " fig"),  # near duplicate of 10/20
+            (31, words("mango")),
+            (32, "SOLO "),  # same normalized text as 12/23
+        ],
+    ]
+    in_dir = tmp_path / "in_cc"
+    in_dir.mkdir()
+    argv = [
+        "stream", "--op", "clusters", "--in", str(in_dir),
+        "--store", str(tmp_path / "cc_store"),
+        "--checkpoint", str(tmp_path / "ckpt_cc"),
+    ]
+    for i, docs in enumerate(files):
+        pq.write_table(
+            pa.Table.from_pandas(
+                pd.DataFrame(docs, columns=["doc_id", "text"]), preserve_index=False
+            ),
+            str(in_dir / f"b{i}.parquet"),
+        )
+        main(argv)
+        assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])[
+            "drained"
+        ]
+
+    from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
+
+    got = {
+        (r["doc_id"], r["cluster_id"])
+        for r in SnapshotTable(
+            str(tmp_path / "cc_store"), "clusters", partition_by=("doc_bucket",)
+        )
+        .read(spark)
+        .collect()
+    }
+    corpus = spark.createDataFrame(
+        [d for docs in files for d in docs], "doc_id long, text string"
+    )
+    want = {
+        (r["doc_id"], r["cluster_id"])
+        for r in duplicate_clusters(spark, corpus).collect()
+    }
+    assert got == want
+    assert {(1, 1), (13, 1), (21, 11), (30, 10), (32, 12)} <= want
+
+
 def test_cli_stream_ops_accept_their_maintenance_knob():
     """Every --op's runner must accept the knob the CLI maps
     --compact-every onto (quota folds rewrite touched buckets wholesale,

@@ -50,7 +50,9 @@ def test_dedup_queries_share_one_corpus_scan(spark, name, max_scans):
     re-planning its own copy. jaccard_topk scans it twice (the shingle
     index and the n_docs count), simhash_pairs once. Counted in the
     physical plan with AQE off, after exchange reuse: the plan AQE's
-    final plan also shows (each consumer's own copy gave 15 and 9)."""
+    final plan also shows (each consumer's own copy gave 15 and 9).
+    jaccard_topk's shingle-df window over h also runs once: its index,
+    probe and size consumers read one exchange above it."""
     import __spark_entry__ as m
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
@@ -61,6 +63,8 @@ def test_dedup_queries_share_one_corpus_scan(spark, name, max_scans):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert plan.count("FileScan parquet") <= max_scans, plan
+    if name == "jaccard_topk":
+        assert plan.count("Window [count(1) windowspecdefinition(h#") == 1, plan
 
 
 def test_fetch_join_broadcasts_claimed_side(spark, tmp_path):

@@ -120,13 +120,3 @@ def test_log_hot_drops_counts_and_warns_once(spark, caplog):
     assert n == want
     warnings = [r for r in caplog.records if r.levelno >= logging.WARNING]
     assert len(warnings) == 1 and str(want) in warnings[0].getMessage()
-
-
-def test_driver_edge_limit_is_shared():
-    """Batch and streaming clustering switch regimes at one constant."""
-    import inspect
-
-    from mklab_focused_crawler_spark.streaming import dedup as sdedup
-
-    sig = inspect.signature(sdedup.run_streaming_duplicate_clusters)
-    assert sig.parameters["driver_edge_limit"].default == dedup.DRIVER_EDGE_LIMIT

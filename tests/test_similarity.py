@@ -403,3 +403,22 @@ def test_ann_family_output_schemas(spark, tmp_path):
         twin = getattr(sim, f"{name}_sql", None)
         if twin is not None:
             assert con.sql(twin()).columns == [c.split(":")[0] for c in want], name
+
+
+def test_derive_k_lists_warns_when_clamped(caplog):
+    """The K_LISTS_CAP ceiling is logged, not silent: one WARNING naming
+    the corpus size and the clamped list count just past the cap, none
+    at the cap itself. Driver arithmetic only."""
+    import logging
+
+    at_cap = sim.K_LISTS_CAP * sim.TARGET_LIST_SIZE
+    over = (sim.K_LISTS_CAP + 1) * sim.TARGET_LIST_SIZE
+    with caplog.at_level(logging.WARNING):
+        assert sim.derive_k_lists(at_cap) == sim.K_LISTS_CAP
+    assert not [r for r in caplog.records if r.levelno >= logging.WARNING]
+    with caplog.at_level(logging.WARNING):
+        assert sim.derive_k_lists(over) == sim.K_LISTS_CAP
+    warnings = [r for r in caplog.records if r.levelno >= logging.WARNING]
+    assert len(warnings) == 1
+    msg = warnings[0].getMessage()
+    assert str(over) in msg and str(sim.K_LISTS_CAP) in msg

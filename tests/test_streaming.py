@@ -735,16 +735,12 @@ def _write_batches(in_dir, frames):
 
 def test_streaming_clusters_driver_work_proportional_to_batch(spark, tmp_path):
     """VERDICT r3 item 2's scale contract: per batch, driver rows
-    touched are ∝ the batch's new edges (its hashed rows + collected
-    pairs + changed-label delta) — NOT ∝ the accumulated evidence. A
-    one-doc, zero-edge batch after a big batch must touch O(1) driver
-    rows."""
+    are ∝ the batch (its bucket lists, edges and their labels) — NOT ∝
+    the accumulated evidence. A one-doc, zero-edge batch after a big
+    batch must bring back O(1) driver rows."""
     import pandas as pd
 
-    from mklab_focused_crawler_spark.operators.dedup import (
-        DUP_OFFSET,
-        augment_corpus,
-    )
+    from mklab_focused_crawler_spark.operators.dedup import BANDS, augment_corpus
     from mklab_focused_crawler_spark.streaming.dedup import (
         run_streaming_duplicate_clusters,
     )
@@ -766,10 +762,10 @@ def test_streaming_clusters_driver_work_proportional_to_batch(spark, tmp_path):
         stream, str(tmp_path / "prop_store"), str(tmp_path / "ckpt_prop"),
         stats_out=stats, key_buckets=LSH_KEY_BUCKETS,
     )
-    assert [s["mode"] for s in stats] == ["driver", "driver"]
     assert stats[0]["driver_rows"] > 100  # the big batch folded real work
-    # the zero-edge batch: 1 hashed row, 0 pairs, 0 delta
-    assert stats[1]["driver_rows"] == 1
+    # the zero-edge batch brings back only its band keys' bucket list
+    # (no candidate, no edge, no label): at most one row per band
+    assert 0 < stats[1]["driver_rows"] <= BANDS
 
 
 def test_streaming_clusters_replay_is_idempotent(spark, tmp_path):
@@ -796,11 +792,11 @@ def test_streaming_clusters_replay_is_idempotent(spark, tmp_path):
     tables = _make_lsh_tables(store)
     groups_t = SnapshotTable(store, "content_groups", partition_by=("doc_bucket",))
     clusters_t = SnapshotTable(store, "clusters", partition_by=("doc_bucket",))
-    state: dict = {"uf": None, "canon": None, "distributed": False}
+    state: dict = {}
     for i, part in enumerate(parts):
         df = spark.createDataFrame(part, "doc_id long, text string")
         _clusters_process_batch(
-            df, i, tables, groups_t, clusters_t, state, None, None, 1_000_000, None
+            df, i, tables, groups_t, clusters_t, state, None, None, None
         )
     before = {
         name: t.read(spark).count()
@@ -813,11 +809,11 @@ def test_streaming_clusters_replay_is_idempotent(spark, tmp_path):
     }
 
     # restart: fresh state, replay the last batch
-    fresh: dict = {"uf": None, "canon": None, "distributed": False}
+    fresh: dict = {}
     df = spark.createDataFrame(parts[1], "doc_id long, text string")
     _clusters_process_batch(
         df, 1, _make_lsh_tables(store), groups_t, clusters_t, fresh,
-        None, None, 1_000_000, None,
+        None, None, None,
     )
     after = {
         name: t.read(spark).count()
@@ -830,50 +826,130 @@ def test_streaming_clusters_replay_is_idempotent(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_clusters_distributed_fallback(spark, tmp_path):
-    """Past driver_edge_limit the op switches to the shared distributed
-    min-label propagation (executor-side, no driver graph) — and the
-    final table still equals batch duplicate_clusters exactly."""
-    from mklab_focused_crawler_spark.operators.dedup import (
-        DUP_OFFSET,
-        augment_corpus,
-        duplicate_clusters,
-    )
+def test_streaming_clusters_crash_between_commits_replays_clean(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after a batch's content_groups append and before its
+    clusters commit, then the restarted drain replaying that batch, must
+    end where a clean drain ends. Doc 5 "solo" arrives in batch 0 and
+    doc 3 "solo" in batch 1; one-token texts have no shingles, so no LSH
+    pair can hide a lost exact-duplicate edge."""
+    import os
+
+    import pandas as pd
+    import pytest
+
+    from mklab_focused_crawler_spark.storage.snapshot import SnapshotTable
     from mklab_focused_crawler_spark.streaming.dedup import (
         run_streaming_duplicate_clusters,
     )
 
-    corpus = augment_corpus(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
-    pdf = corpus.toPandas()
-    parts = [
-        pdf[pdf.doc_id >= DUP_OFFSET],
-        pdf[(pdf.doc_id < DUP_OFFSET) & (pdf.doc_id % 2 == 0)],
-        pdf[(pdf.doc_id < DUP_OFFSET) & (pdf.doc_id % 2 == 1)],
-    ]
-    in_dir = tmp_path / "in_fb"
-    _write_batches(in_dir, parts)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+    in_dir = tmp_path / "in_crash"
+    _write_batches(
+        in_dir,
+        [
+            pd.DataFrame({"doc_id": [5], "text": ["solo"]}),
+            pd.DataFrame({"doc_id": [3], "text": ["solo"]}),
+        ],
     )
+    store, ckpt = str(tmp_path / "crash_store"), str(tmp_path / "ckpt_crash")
+
+    def drain():
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(in_dir))
+        )
+        return run_streaming_duplicate_clusters(
+            stream, store, ckpt, key_buckets=LSH_KEY_BUCKETS
+        )
+
+    # the first clusters merge (batch 1's) dies once
+    real_merge = SnapshotTable.merge
+    armed = [True]
+
+    def crashing_merge(self, *args, **kwargs):
+        if armed[0] and self.dir.endswith(os.sep + "clusters"):
+            armed[0] = False
+            raise RuntimeError("injected crash before the clusters commit")
+        return real_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "merge", crashing_merge)
+    with pytest.raises(Exception):
+        drain()
+    assert not armed[0]
+    groups_t = SnapshotTable(store, "content_groups", partition_by=("doc_bucket",))
+    assert groups_t.has_tag("b1")  # the crash landed between the two commits
+    tables = drain()  # a fresh call: fresh state, batch 1 replays
+    got = sorted(
+        (r["doc_id"], r["cluster_id"]) for r in tables["clusters"].read(spark).collect()
+    )
+    assert got == [(3, 3), (5, 3)]
+
+
+def test_streaming_clusters_fresh_process_driver_rows(spark, tmp_path, monkeypatch):
+    """A fresh process (a new drain over an existing store) brings to
+    the driver rows that grow with its batch, not with the store: a
+    one-doc batch duplicating an old doc collects a small constant, and
+    ``driver_rows`` reports exactly what every collect returned."""
+    import pandas as pd
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from mklab_focused_crawler_spark.operators.dedup import BANDS, augment_corpus
+    from mklab_focused_crawler_spark.streaming.dedup import (
+        run_streaming_duplicate_clusters,
+    )
+
+    pdf = augment_corpus(spark.read.parquet(f"{SF_DIR}/documents.parquet")).toPandas()
+    store = str(tmp_path / "fresh_store")
+
+    def drain(name, frames, **kw):
+        _write_batches(tmp_path / f"in_{name}", frames)
+        stream = spark.readStream.schema("doc_id long, text string").parquet(
+            str(tmp_path / f"in_{name}")
+        )
+        return run_streaming_duplicate_clusters(
+            stream, store, str(tmp_path / f"ckpt_{name}"),
+            key_buckets=LSH_KEY_BUCKETS, **kw,
+        )
+
+    tables = drain("big", [pdf])
+    labels = {
+        r["doc_id"]: r["cluster_id"] for r in tables["clusters"].read(spark).collect()
+    }
+    assert len(labels) > 100
+    old = min(labels)
+    text = pdf.loc[pdf.doc_id == old, "text"].iloc[0]
+    new = 10**7
+
+    counted: list = []
+    real_collect, real_arrow = DataFrame.collect, DataFrame.toArrow
+
+    def collect(self):
+        rows = real_collect(self)
+        counted.append(len(rows))
+        return rows
+
+    def to_arrow(self):
+        table = real_arrow(self)
+        counted.append(table.num_rows)
+        return table
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    monkeypatch.setattr(DataFrame, "toArrow", to_arrow)
     stats: list = []
-    tables = run_streaming_duplicate_clusters(
-        stream, str(tmp_path / "fb_store"), str(tmp_path / "ckpt_fb"),
-        driver_edge_limit=0, stats_out=stats, key_buckets=LSH_KEY_BUCKETS,
+    tables = drain(
+        "dup", [pd.DataFrame({"doc_id": [new], "text": [text]})], stats_out=stats
     )
-    # batch 0 runs in the (empty-evidence) driver regime, crosses the
-    # limit, and every later batch runs distributed
-    assert [s["mode"] for s in stats] == ["driver", "distributed", "distributed"]
+    monkeypatch.undo()
+    # one doc's band keys bound its key-bucket list; its edges, their
+    # labels and the relabel's doc buckets add a handful
+    assert sum(counted) <= 2 * BANDS, counted
+    assert [s["driver_rows"] for s in stats] == [sum(counted)]
     got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in tables["clusters"].read(spark).collect()
+        r["doc_id"]: r["cluster_id"] for r in tables["clusters"].read(spark).collect()
     }
-    want = {
-        (r["doc_id"], r["cluster_id"])
-        for r in duplicate_clusters(spark, corpus).collect()
-    }
-    assert got == want and len(want) > 0
+    assert got[new] == labels[old] and len(got) == len(labels) + 1
 
 
 def test_streaming_hot_cap_contract(spark, tmp_path):
